@@ -176,13 +176,53 @@ object Dedup {
       .distinct()
   }
 
-  /** Transitive duplicate clusters from candidate pairs: connected
-    * components via alternating LARGE-STAR / SMALL-STAR contraction
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    * O(log² n) rounds regardless of component diameter, vs O(diameter)
-    * for plain min-label propagation. A 1M-node chain converges in ~20
-    * rounds instead of 500k; dup clusters at 100 TB can contain exactly
-    * such long chains of pairwise-similar shards.
+  /** Transitive duplicate clusters from candidate pairs: the connected
+    * components of the graph whose edges are the (a_id, b_id) rows.
+    * Other columns on `pairs` (a score, say) are ignored.
+    *
+    * The pairs are pinned once (`select(a_id, b_id)`, local checkpoint)
+    * and one aggregate over the pin counts the edges and the rows with
+    * a null id. That observed size picks one of two exact routes:
+    *  - one task: long ids, no null id and at most
+    *    [[LocalContractMaxEdges]] (2M) edges go to [[localClusters]], a
+    *    min-label union-find whose state is bounded at ≤ 192 MiB
+    *    (≤ 4M distinct ids in a [[LongLongMap]]). Before the caller's
+    *    own action it costs the aggregate's one job, where the rounds
+    *    run one job a round plus the convergence confirm and the node
+    *    list.
+    *  - rounds: every other graph takes the distributed star contraction
+    *    of [[roundsClusters]], whose cost grows with the graph, not with
+    *    one task's memory.
+    *
+    * Both routes return (doc_id, cluster_id = smallest doc_id in the
+    * component) for every doc that appears in at least one pair; a null
+    * id (rounds route only) labels itself null.
+    */
+  def dupClusters(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
+    // eager=false: the aggregate right below is the materializing action
+    val p0 = pairs.select(col("a_id"), col("b_id")).localCheckpoint(eager = false)
+    val idsAreLong = p0.schema.fields.forall(_.dataType ==
+      org.apache.spark.sql.types.LongType)
+    val size = p0.agg(count(lit(1)),
+      count(when(col("a_id").isNull || col("b_id").isNull, 1))).head()
+    if (idsAreLong && size.getLong(1) == 0 && size.getLong(0) <= LocalContractMaxEdges)
+      localClusters(p0) // reads the pin lazily: it stays
+    else {
+      val out = roundsClusters(p0, maxIter)
+      // the rounds pinned their own copy and return frames over their
+      // own checkpoints only
+      org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(p0)
+      out
+    }
+  }
+
+  /** The distributed route of [[dupClusters]]: connected components via
+    * alternating LARGE-STAR / SMALL-STAR contraction (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond") — O(log² n) rounds
+    * regardless of component diameter, vs O(diameter) for plain
+    * min-label propagation. A 1M-node chain converges in ~20 rounds
+    * instead of 500k; dup clusters at 100 TB can contain exactly such
+    * long chains of pairwise-similar shards.
     *
     * Edges are kept directed child→parent with child > parent:
     *  - large-star: every strictly-larger neighbor of x re-points to
@@ -201,11 +241,8 @@ object Dedup {
     *
     * Logs a loud warning if maxIter is hit before the fixpoint (callers
     * get best-effort labels, never silently-partial ones).
-    *
-    * Returns (doc_id, cluster_id = smallest doc_id in the component)
-    * for every doc that appears in at least one pair.
     */
-  def dupClusters(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
+  private[graft] def roundsClusters(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
     // Materialize the incoming pair pipeline ONCE: both the canonical
     // edge set and the node list below read this checkpoint. Deriving
     // nodes straight from `pairs` would re-execute the whole candidate
@@ -340,45 +377,34 @@ object Dedup {
     val subEdges = affected.filter(col("doc_id") =!= col("cluster_id"))
         .select(col("doc_id").as("a_id"), col("cluster_id").as("b_id"))
       .union(np)
-    // Contraction route (r17, VERDICT-r16 item 3): the iterative
-    // star-contraction costs ~8-10 scheduled jobs (per-round
-    // checkpoint + checksum, convergence confirm, node list) — pure
-    // scheduling when the touched subgraph is micro-batch-sized
-    // (measured: ~2.0 s of q126's ~2.1 s per-batch incremental wall).
-    // The subgraph is pinned and counted ONCE (the count is the
-    // checkpoint's materializing action); at or below
-    // [[LocalContractMaxEdges]] it is contracted in ONE task by an
-    // exact min-label union-find — the same task-local bound the
-    // broadcasts above already impose on the batch, applied to the
-    // touched membership. Larger subgraphs (or non-long ids) take the
-    // distributed [[dupClusters]] rounds exactly as before.
-    val sub = subEdges.localCheckpoint(eager = false)
-    val idsAreLong = sub.schema.fields.forall(_.dataType ==
-      org.apache.spark.sql.types.LongType)
-    val nSub = sub.count()
-    val relabeled =
-      if (idsAreLong && nSub <= LocalContractMaxEdges) localClusters(sub)
-      else dupClusters(sub, maxIter)
+    // one size gate, in dupClusters: a micro-batch-sized subgraph is
+    // contracted in one task, a larger one by the distributed rounds
+    val relabeled = dupClusters(subEdges, maxIter)
     val untouched = p.join(touchedClusters, Seq("cluster_id"), "left_anti")
       .select(col("doc_id"), col("cluster_id"))
     untouched.union(relabeled)
   }
 
-  /** One-task ceiling for the union-find fast path of
-    * [[incrementalClusters]] — ~2M edges is tens of MB of hash-map
-    * state, comfortably one task; past it the distributed rounds take
-    * over (the same "too big for the incremental path" boundary the
-    * broadcast hints already declare).
+  /** Edge ceiling of [[dupClusters]]' one-task route: 2M edges hold at
+    * most 4M distinct ids, whose union-find map stays within
+    * `LongLongMap.memoryBound(4M)` = 192 MiB in one task; past it the
+    * distributed rounds take over (the same "too big for the
+    * incremental path" boundary the broadcast hints of
+    * [[incrementalClusters]] declare).
     */
-  private val LocalContractMaxEdges = 2000000L
+  private[graft] val LocalContractMaxEdges = 2000000L
 
   /** Exact connected components of a (small, pinned) pair frame in ONE
-    * task: min-label union-find with path compression. Bit-identical
-    * output contract to [[dupClusters]]: (doc_id, cluster_id = smallest
-    * doc_id in the component) for every doc appearing in at least one
-    * pair — ids appearing only in self-pairs label themselves, exactly
-    * like dupClusters' node list + left join. Ids must be non-null
-    * longs (every candidate-pair builder in the repo emits them so).
+    * task: min-label union-find with path compression over a primitive
+    * [[LongLongMap]]. Bit-identical output contract to [[dupClusters]]:
+    * (doc_id, cluster_id = smallest doc_id in the component) for every
+    * doc appearing in at least one pair — ids appearing only in
+    * self-pairs label themselves. Ids must be non-null longs.
+    *
+    * Memory: the map is the task's only state (input rows stream in,
+    * output rows stream out); n edges hold at most 2n ids, so at
+    * [[LocalContractMaxEdges]] the task holds at most
+    * `LongLongMap.memoryBound(2 * LocalContractMaxEdges)` bytes (192 MiB).
     */
   private[graft] def localClusters(pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}
@@ -388,16 +414,16 @@ object Dedup {
       org.apache.spark.sql.types.StructField("cluster_id",
         org.apache.spark.sql.types.LongType, nullable = false)))
     pairs.toDF("a_id", "b_id").coalesce(1).mapPartitions { it =>
-      val parent = new java.util.HashMap[java.lang.Long, java.lang.Long]
+      val parent = new LongLongMap
       def add(x: Long): Unit =
-        if (!parent.containsKey(x)) parent.put(x, x)
+        if (!parent.contains(x)) parent(x) = x
       def find(x: Long): Long = {
         var r = x
-        while (parent.get(r) != r) r = parent.get(r)
+        while (parent(r) != r) r = parent(r)
         var c = x
-        while (parent.get(c) != r) {
-          val n = parent.get(c)
-          parent.put(c, r)
+        while (parent(c) != r) {
+          val n = parent(c)
+          parent(c) = r
           c = n
         }
         r
@@ -410,17 +436,12 @@ object Dedup {
           val ra = find(a)
           val rb = find(b)
           // union toward the smaller root: roots stay component minima
-          if (ra < rb) parent.put(rb, ra)
-          else if (rb < ra) parent.put(ra, rb)
+          if (ra < rb) parent(rb) = ra
+          else if (rb < ra) parent(ra) = rb
         }
       }
-      val out = new scala.collection.mutable.ArrayBuffer[Row](parent.size())
-      val keys = parent.keySet().iterator()
-      while (keys.hasNext) {
-        val k = keys.next().longValue()
-        out += Row(k, find(k))
-      }
-      out.iterator
+      // find only rewrites values of present keys: the key scan is safe
+      parent.keysIterator.map(k => Row(k, find(k)))
     }(Encoders.row(outSchema))
   }
 
@@ -669,7 +690,7 @@ object Dedup {
     // and df(k) = df(e) whenever k is collision-free, so the selected
     // prefixes (hence the candidate set) are bit-identical to the
     // string-keyed form on any collision-free corpus (probed: same
-    // 309,983 candidates at sf0.1). The df map shrinks to (k, df) and
+    // 309,803 candidates at sf0.1). The df map shrinks to (k, df) and
     // the self-join input to (k, id, sz): no string reaches the
     // candidate self-join's exchange or its sort.
     val elems = sized.select(col("id"), col("sz"), explode(col("sh")).as("e"))

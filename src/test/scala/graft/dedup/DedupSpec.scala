@@ -95,11 +95,13 @@ class DedupSpec extends SparkSpec {
   test("dupClusters: 1000-node chain converges via star contraction") {
     // a pure chain is the worst case for label propagation (would need
     // ~500 rounds); large-star/small-star must resolve it within the
-    // default maxIter=30 (O(log² n))
+    // default maxIter=30 (O(log² n)). dupClusters itself takes the
+    // one-task route on a graph this small, so the rounds run directly.
     val chain = (0L until 999L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val got = Dedup.dupClusters(chain).collect()
-    assert(got.length == 1000)
-    assert(got.forall(_.getLong(1) == 0L), got.filter(_.getLong(1) != 0L).take(5).toSeq)
+    for (got <- Seq(Dedup.roundsClusters(chain), Dedup.dupClusters(chain)).map(_.collect())) {
+      assert(got.length == 1000)
+      assert(got.forall(_.getLong(1) == 0L), got.filter(_.getLong(1) != 0L).take(5).toSeq)
+    }
   }
 
   test("dupClusters releases superseded per-round checkpoints") {
@@ -107,12 +109,18 @@ class DedupSpec extends SparkSpec {
     // must be unpersisted as they go (only the final round's blocks may
     // remain, since the returned frame reads them lazily)
     val chain = (0L until 200L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val before = spark.sparkContext.getPersistentRDDs.size
-    Dedup.dupClusters(chain).count()
-    val after = spark.sparkContext.getPersistentRDDs.size
-    // the lazily-read final star edges + node list may survive; the
-    // per-round history and the input-pair checkpoint must not
-    assert(after - before <= 2, s"leaked checkpoint RDDs: $before -> $after")
+    // the rounds directly, and through dupClusters' rounds route (string
+    // ids), which pins the pairs once more before the rounds start
+    for (clusters <- Seq(() => Dedup.roundsClusters(chain),
+        () => Dedup.dupClusters(chain.select(col("a_id").cast("string"),
+          col("b_id").cast("string"))))) {
+      val before = spark.sparkContext.getPersistentRDDs.size
+      clusters().count()
+      val after = spark.sparkContext.getPersistentRDDs.size
+      // the lazily-read final star edges + node list may survive; the
+      // per-round history and the input-pair checkpoints must not
+      assert(after - before <= 2, s"leaked checkpoint RDDs: $before -> $after")
+    }
   }
 
   test("dupClusters: reversed/duplicated/self pairs don't break labels") {
@@ -164,9 +172,12 @@ class DedupSpec extends SparkSpec {
       val df = pairs.toDF("a_id", "b_id")
       val fast = Dedup.localClusters(df)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val slow = Dedup.dupClusters(df)
+      val slow = Dedup.roundsClusters(df)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val routed = Dedup.dupClusters(df)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(fast == slow, s"trial $trial differs")
+      assert(routed == slow, s"trial $trial differs through dupClusters")
     }
   }
 
@@ -178,9 +189,60 @@ class DedupSpec extends SparkSpec {
     val b2 = Seq(("b", "c")).toDF("a_id", "b_id")
     val inc = Dedup.incrementalClusters(Dedup.dupClusters(b1), b2)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val scratch = Dedup.dupClusters(b1.union(b2))
+    val scratch = Dedup.roundsClusters(b1.union(b2))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(inc == scratch)
+  }
+
+  test("dupClusters ≡ roundsClusters on adversarial inputs, each on its route") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.get(0), r.get(1))).toSet
+    val nullable = Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (2L, null), (null, 3L), (null, null), (4L, 5L))
+    val cases = Seq(
+      // null ids: the rounds label a null id null; getLong would throw
+      "null ids" -> nullable.toDF("a_id", "b_id"),
+      "self-pairs" -> Seq((1L, 1L), (2L, 2L), (2L, 3L), (9L, 9L)).toDF("a_id", "b_id"),
+      "duplicate and reversed pairs" ->
+        Seq((2L, 1L), (1L, 2L), (1L, 2L), (3L, 2L), (8L, 7L), (7L, 8L)).toDF("a_id", "b_id"),
+      "int ids" -> Seq((1, 2), (3, 2), (5, 6)).toDF("a_id", "b_id"),
+      "string ids" -> Seq(("b", "a"), ("c", "b"), ("x", "y")).toDF("a_id", "b_id"),
+      // the verified-pair frame of a dedup pipeline carries its score
+      "extra j column" -> Seq((2L, 1L, 0.9), (3L, 2L, 0.8), (6L, 5L, 1.0))
+        .toDF("a_id", "b_id", "j"))
+    for ((name, pairs) <- cases) {
+      val routed = Dedup.dupClusters(pairs)
+      val rounds = Dedup.roundsClusters(pairs)
+      assert(rows(routed) == rows(rounds), name)
+      // the one-task route emits longs: int and string ids kept their
+      // type, so they took the rounds
+      assert(routed.schema.map(_.dataType) == rounds.schema.map(_.dataType), name)
+    }
+    assert(rows(Dedup.dupClusters(cases.head._2)) ==
+      Set((1L, 1L), (2L, 1L), (3L, 3L), (4L, 4L), (5L, 4L), (null, null)))
+  }
+
+  test("dupClusters contracts a small long-id graph in at most 3 jobs") {
+    val sc = spark.sparkContext
+    val chain = (0L until 999L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    def jobsOf(clusters: => org.apache.spark.sql.DataFrame): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val counter = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.TestListenerBus.drain(sc)
+      sc.addSparkListener(counter)
+      try {
+        clusters.collect()
+        org.apache.spark.TestListenerBus.drain(sc)
+      } finally sc.removeSparkListener(counter)
+      jobs.get
+    }
+    val routed = jobsOf(Dedup.dupClusters(chain))
+    val rounds = jobsOf(Dedup.roundsClusters(chain))
+    assert(routed <= 3, s"dupClusters ran $routed jobs")
+    assert(rounds > routed, s"the rounds ran $rounds jobs, the one-task route $routed")
   }
 
   test("SimHashExpr ≡ the HOF simhash32, bit for bit") {

@@ -7,6 +7,9 @@ the Spark parquet output: schema (column names), row count, and exact
 values (columns sorted by name, rows sorted by all columns).
 
 Usage: python3 tools/oracle_check.py [--sf /root/testdata/sf0.01] [--run] [names...]
+
+With --run and names, Verify dumps only those queries, so a subset check
+is one command. Verify runs in the checkout that holds this script.
 """
 import argparse
 import json
@@ -17,6 +20,8 @@ from pathlib import Path
 
 import duckdb
 
+# the checkout this script lives in: Verify compiles and runs this tree
+ROOT = Path(__file__).resolve().parent.parent
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -39,14 +44,18 @@ def fetch_sorted(rel):
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--out", default="/root/repo/tmp/verify")
+    ap.add_argument("--out", default=str(ROOT / "tmp" / "verify"))
     ap.add_argument("--run", action="store_true")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
+    # Verify runs in ROOT: hand it paths that mean the same from there
+    args.sf, args.out = (str(Path(p).resolve()) for p in (args.sf, args.out))
 
     if args.run:
-        cmd = ["sbt", "-batch", f'runMain graft.Verify {args.sf} {args.out}']
-        r = subprocess.run(cmd, cwd="/root/repo", capture_output=True, text=True)
+        # graft.Verify takes the subset as one comma-joined argument
+        only = f" {','.join(args.names)}" if args.names else ""
+        cmd = ["sbt", "-batch", f"runMain graft.Verify {args.sf} {args.out}{only}"]
+        r = subprocess.run(cmd, cwd=ROOT, capture_output=True, text=True)
         if r.returncode != 0:
             print(r.stdout[-4000:], r.stderr[-4000:])
             sys.exit(1)
