@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{call_function, expr, lit, xxhash64}
 
 /** Bounded-size Bloom membership gate for anti-corpus dedup.
@@ -19,7 +16,7 @@ import org.apache.spark.sql.functions.{call_function, expr, lit, xxhash64}
   *
   * Wraps Spark's own runtime-filter expressions
   * (`BloomFilterAggregate` / `BloomFilterMightContain` — the pair
-  * behind `InjectRuntimeFilter`) through the session function registry,
+  * behind `InjectRuntimeFilter`) as two entries of [[GraftFunctions.specs]],
   * hashing both sides with `xxhash64` exactly as the injected runtime
   * filters do. The aggregation is map-side combinable (bitwise OR of
   * fixed-size bit arrays), so building the sketch is one narrow pass
@@ -40,30 +37,12 @@ object BloomGate {
   val AggName = "graft_bloom_agg"
   val MightContainName = "graft_bloom_might_contain"
 
-  /** Idempotent: registering on every call would mutate the shared
-    * session registry each time (and spam "function replaced" warnings
-    * in concurrent suites — same hazard class as an extraStrategies
-    * race). The builders are deterministic, so first registration wins.
-    */
-  private def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier(AggName))) {
-      reg.createOrReplaceTempFunction(AggName,
-        exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)),
-        "built-in")
-      reg.createOrReplaceTempFunction(MightContainName,
-        exprs => BloomFilterMightContain(exprs(0), exprs(1)),
-        "built-in")
-    }
-  }
-
   /** The corpus membership sketch over `c` (any comparable column;
     * hashed via xxhash64) as a LAZY one-row, one-binary-column frame.
     * Nothing executes here; the probe consumes it as a scalar subquery.
     */
   def sketch(df: DataFrame, c: Column, expectedItems: Long,
       numBits: Long): DataFrame = {
-    register(df.sparkSession)
     df.select(call_function(AggName, xxhash64(c), lit(expectedItems),
       lit(numBits)).as("sketch"))
   }
@@ -75,7 +54,6 @@ object BloomGate {
     */
   def mightContain(sketch: DataFrame, c: Column,
       tag: String = "default"): Column = {
-    register(sketch.sparkSession)
     val view = s"graft_bloom_sketch_$tag"
     sketch.createOrReplaceTempView(view)
     // BloomFilterMightContain requires its sketch side to be foldable

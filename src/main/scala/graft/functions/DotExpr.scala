@@ -44,8 +44,6 @@ case class DotExpr(left: Expression, right: Expression)
 }
 
 object Dot {
-  def apply(spark: SparkSession, a: Column, b: Column): Column = {
-    GraftFunctions.register(spark)
+  def apply(spark: SparkSession, a: Column, b: Column): Column =
     call_function(GraftFunctions.DotName, a, b)
-  }
 }

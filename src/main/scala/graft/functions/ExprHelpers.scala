@@ -160,26 +160,30 @@ object ExprHelpers {
     * between banding and scoring instead of recomputing the text→shingle
     * chain per consumer. Bit-identical to bandValues(minhash(text)):
     * duplicates in the input can't change a min, and an empty shingle
-    * set yields all-null bands exactly like a below-k document.
+    * set yields all-null bands exactly like a below-k document. A NULL
+    * element is skipped, as `array_min` skips a NULL hash; an array of
+    * only NULLs counts as empty.
     */
   def minhashBands(arr: ArrayData, numHashes: Int): ArrayData = {
     val nBands = numHashes / 2
-    if (arr.numElements() == 0) {
-      return new GenericArrayData(Array.fill[Any](nBands)(null))
-    }
     val md = mdPool.get()
     val mins = Array.fill(numHashes)(Long.MaxValue)
+    var seen = false
     var i = 0
     while (i < arr.numElements()) {
-      val hp = h32(md, arr.getUTF8String(i).toString) % Hashing.P
-      var k = 0
-      while (k < numHashes) {
-        val v = (hp * Hashing.HashA(k) + Hashing.HashB(k)) % Hashing.P
-        if (v < mins(k)) mins(k) = v
-        k += 1
+      if (!arr.isNullAt(i)) {
+        seen = true
+        val hp = h32(md, arr.getUTF8String(i).toString) % Hashing.P
+        var k = 0
+        while (k < numHashes) {
+          val v = (hp * Hashing.HashA(k) + Hashing.HashB(k)) % Hashing.P
+          if (v < mins(k)) mins(k) = v
+          k += 1
+        }
       }
       i += 1
     }
+    if (!seen) return new GenericArrayData(Array.fill[Any](nBands)(null))
     val bands = new Array[Any](nBands)
     var j = 0
     while (j < nBands) {
@@ -659,6 +663,8 @@ object ExprHelpers {
     * code points), whose HOF form is O(len²) per string because
     * substr(c, i, 1) is an O(i) scan. Empty string → 0, matching the
     * `when(length > 0, ...).otherwise(0)` guard in the HOF builder.
+    * The guard also maps NULL to 0, but a NULL never reaches this
+    * function: [[FingerprintExpr]] returns NULL for it.
     */
   def fingerprint(text: UTF8String): Long = {
     val s = text.toString
@@ -724,7 +730,9 @@ object ExprHelpers {
     * hs_i) mod P. Bit-identical to the typed-Dataset flatMap it
     * replaces (same hash, same update, same (tier, 1-based start,
     * hash) rows in the same order); tiers shorter than the doc emit
-    * nothing, docs shorter than every tier emit an empty array.
+    * nothing, docs shorter than every tier emit an empty array. A NULL
+    * token has no hash, so no window over it is emitted; windows clear
+    * of it keep their positions and hashes.
     */
   def multiscaleWindows(ws: ArrayData, tiers: Array[Int], rollB: Long)
       : ArrayData = {
@@ -733,7 +741,10 @@ object ExprHelpers {
     val md = mdPool.get()
     val hs = new Array[Long](n)
     var i = 0
-    while (i < n) { hs(i) = h32u(md, ws.getUTF8String(i)); i += 1 }
+    while (i < n) {
+      if (!ws.isNullAt(i)) hs(i) = h32u(md, ws.getUTF8String(i))
+      i += 1
+    }
     var total = 0
     var t = 0
     while (t < tiers.length) {
@@ -750,23 +761,34 @@ object ExprHelpers {
         var k = 0
         while (k < l - 1) { pow = pow * rollB % P; k += 1 }
         var h = 0L
+        var nulls = 0 // NULL tokens inside the current window
         var j = 0
-        while (j < l) { h = (h * rollB + hs(j)) % P; j += 1 }
-        out(o) = new org.apache.spark.sql.catalyst.expressions
-          .GenericInternalRow(Array[Any](l, 1, h))
-        o += 1
+        while (j < l) {
+          h = (h * rollB + hs(j)) % P
+          if (ws.isNullAt(j)) nulls += 1
+          j += 1
+        }
+        if (nulls == 0) {
+          out(o) = new org.apache.spark.sql.catalyst.expressions
+            .GenericInternalRow(Array[Any](l, 1, h))
+          o += 1
+        }
         i = l
         while (i < n) {
           h = ((h + P - hs(i - l) * pow % P) % P * rollB + hs(i)) % P
-          out(o) = new org.apache.spark.sql.catalyst.expressions
-            .GenericInternalRow(Array[Any](l, i - l + 2, h))
-          o += 1
+          if (ws.isNullAt(i - l)) nulls -= 1
+          if (ws.isNullAt(i)) nulls += 1
+          if (nulls == 0) {
+            out(o) = new org.apache.spark.sql.catalyst.expressions
+              .GenericInternalRow(Array[Any](l, i - l + 2, h))
+            o += 1
+          }
           i += 1
         }
       }
       t += 1
     }
-    new GenericArrayData(out)
+    new GenericArrayData(if (o == total) out else out.take(o))
   }
 
   /** Multiscale coverage statistics in one pass (see

@@ -6,7 +6,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream,
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -178,24 +178,12 @@ case class GramMatrixAgg(
 
 object GramMatrixAgg {
 
-  val Name = "graft_gram_matrix"
-
   /** SQL shape: `graft_gram_matrix(vec, dims_literal)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name,
-      exprs => GramMatrixAgg(exprs.head, exprs(1) match {
-        case Literal(v: Number, _) => v.intValue()
-        case other => throw new IllegalArgumentException(
-          s"dims must be an integer literal, got $other")
-      }),
-      "built-in")
+  val Name = "graft_gram_matrix"
 
   /** Column form for `agg(...)`: struct(n, g = array<struct(di, dj, s)>)
     * with s the 1e-12-lattice sum of Σ e(di)·e(dj).
     */
-  def gram(spark: SparkSession, c: Column, dims: Int): Column = {
-    register(spark)
+  def gram(spark: SparkSession, c: Column, dims: Int): Column =
     call_function(Name, c, org.apache.spark.sql.functions.lit(dims))
-  }
 }

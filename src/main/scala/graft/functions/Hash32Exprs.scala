@@ -16,9 +16,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * inversion" profile — while a static-call expression JITs and keeps
   * the whole stage in one codegen span).
   *
-  * Each is bit-identical to the HOF composition it replaces; the
-  * DuckDB oracle SQL is untouched, so the cross-engine hash checks
-  * prove the equivalences on every corpus.
+  * Each is bit-identical to the HOF composition it replaces on
+  * non-NULL input; the DuckDB oracle SQL is untouched, so the
+  * cross-engine hash checks prove the equivalences on every corpus.
+  * On a NULL input every expression here returns NULL, where the HOF
+  * builders of [[FingerprintExpr]] and [[LangIdExpr]] returned 0 and
+  * "und" (`TextFunctions.fingerprint` / `langIdHeuristic`).
   */
 
 /** Elementwise md5-prefix hash32 of a string array in one pass.
@@ -305,69 +308,49 @@ case class MultiscaleWindowsExpr(child: Expression, tiers: Seq[Int],
 }
 
 object MultiscaleWindows {
-  def apply(spark: SparkSession, c: Column): Column = {
-    GraftFunctions.register(spark)
+  def apply(spark: SparkSession, c: Column): Column =
     call_function(GraftFunctions.MultiscaleWindowsName, c)
-  }
 }
 
 object CoverageStats {
   def apply(spark: SparkSession, v64: Column, v32: Column, v16: Column,
-      v8: Column): Column = {
-    GraftFunctions.register(spark)
+      v8: Column): Column =
     call_function(GraftFunctions.CoverageStatsName, v64, v32, v16, v8)
-  }
 }
 
 object Fingerprint {
-  def apply(spark: SparkSession, c: Column): Column = {
-    GraftFunctions.register(spark)
+  def apply(spark: SparkSession, c: Column): Column =
     call_function(GraftFunctions.FingerprintName, c)
-  }
 }
 
 object HashedBuckets {
-  def apply(spark: SparkSession, c: Column): Column = {
-    GraftFunctions.register(spark)
+  def apply(spark: SparkSession, c: Column): Column =
     call_function(GraftFunctions.HashedBucketsName, c)
-  }
 }
 
 object HashedScore {
-  def apply(spark: SparkSession, c: Column): Column = {
-    GraftFunctions.register(spark)
+  def apply(spark: SparkSession, c: Column): Column =
     call_function(GraftFunctions.HashedScoreName, c)
-  }
 }
 
 object Hash32Arr {
   /** array_distinct(transform(arr, hash32)) — first-occurrence order. */
-  def distinct(spark: SparkSession, c: Column): Column = {
-    GraftFunctions.register(spark)
+  def distinct(spark: SparkSession, c: Column): Column =
     call_function(GraftFunctions.Hash32DistinctName, c)
-  }
   /** array_sort(transform(arr, hash32)). */
-  def sorted(spark: SparkSession, c: Column): Column = {
-    GraftFunctions.register(spark)
+  def sorted(spark: SparkSession, c: Column): Column =
     call_function(GraftFunctions.Hash32SortedName, c)
-  }
   /** array_sort(array_distinct(transform(arr, hash32))). */
-  def sortedDistinct(spark: SparkSession, c: Column): Column = {
-    GraftFunctions.register(spark)
+  def sortedDistinct(spark: SparkSession, c: Column): Column =
     call_function(GraftFunctions.Hash32SortedDistinctName, c)
-  }
 }
 
 object LangId {
-  def apply(spark: SparkSession, c: Column): Column = {
-    GraftFunctions.register(spark)
+  def apply(spark: SparkSession, c: Column): Column =
     call_function(GraftFunctions.LangIdName, c)
-  }
 }
 
 object CdcChunks {
-  def apply(spark: SparkSession, c: Column): Column = {
-    GraftFunctions.register(spark)
+  def apply(spark: SparkSession, c: Column): Column =
     call_function(GraftFunctions.CdcChunksName, c)
-  }
 }

@@ -75,8 +75,6 @@ case class InterUnionExpr(left: Expression, right: Expression)
 }
 
 object InterUnion {
-  def apply(spark: SparkSession, a: Column, b: Column): Column = {
-    GraftFunctions.register(spark)
+  def apply(spark: SparkSession, a: Column, b: Column): Column =
     call_function(GraftFunctions.InterUnionName, a, b)
-  }
 }

@@ -35,8 +35,6 @@ case class JaccardExpr(left: Expression, right: Expression)
 }
 
 object Jaccard {
-  def apply(spark: SparkSession, a: Column, b: Column): Column = {
-    GraftFunctions.register(spark)
+  def apply(spark: SparkSession, a: Column, b: Column): Column =
     call_function(GraftFunctions.JaccardName, a, b)
-  }
 }

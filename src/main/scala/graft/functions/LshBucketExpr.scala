@@ -33,9 +33,7 @@ case class LshBucketExpr(child: Expression, nPlanes: Int)
 }
 
 object LshBucket {
-  /** Registered-function accessor (see GraftFunctions.register). */
-  def apply(spark: SparkSession, vec: Column): Column = {
-    GraftFunctions.register(spark)
+  /** Column accessor for the injected `graft_lsh_bucket`. */
+  def apply(spark: SparkSession, vec: Column): Column =
     call_function(GraftFunctions.LshBucketName, vec)
-  }
 }

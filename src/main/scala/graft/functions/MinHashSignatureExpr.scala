@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -64,9 +65,12 @@ case class MinHashBandsExpr(child: Expression, numHashes: Int)
       s"${ev.value} = graft.functions.ExprHelpers.minhashBands($c, $numHashes);")
 }
 
-/** Session-level registration for graft's custom expressions (public
-  * `functionRegistry` route — works on any session the driver hands us,
-  * no SparkSessionExtensions wiring required at session construction).
+/** The one declaration of every `graft_*` SQL function: [[specs]] names
+  * each function, its exact argument count and its builder, and
+  * [[GraftExtensions]] injects the whole table into every session of a
+  * context built with `spark.sql.extensions=graft.functions.GraftExtensions`.
+  * The Column accessors below and beside each expression only call the
+  * injected names.
   */
 object GraftFunctions {
 
@@ -101,6 +105,12 @@ object GraftFunctions {
   /** The one hashed-feature width every T42/DSIR consumer uses. */
   val FeatureBuckets = 1024
 
+  /** One SQL function. `build` receives exactly `arity` arguments: the
+    * extension checks the count before it calls the builder.
+    */
+  final case class FunctionSpec(name: String, arity: Int,
+      build: Seq[Expression] => Expression)
+
   /** Arity gate for SQL builders (review-r11): without it, surplus
     * arguments were silently DISCARDED (`exprs.head` ignores a second
     * arg — a user's misplaced argument produced plausible wrong
@@ -115,156 +125,74 @@ object GraftFunctions {
     exprs
   }
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def one(name: String)(mk: Expression => Expression)
-        : Seq[Expression] => Expression =
-      exprs => mk(checkArity(name, 1, exprs).head)
-    reg.createOrReplaceTempFunction(
-      MinhashName,
-      one(MinhashName)(MinHashSignatureExpr(_, shingleK = 3, numHashes = 8)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      MinhashBandsName,
-      one(MinhashBandsName)(MinHashBandsExpr(_, numHashes = 8)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      ShinglesName,
-      one(ShinglesName)(ShingleSetExpr(_, shingleK = 3)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      ShingleExplodeName,
-      one(ShingleExplodeName)(ShingleExplodeExpr(_, shingleK = 3)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      LshBucketName,
-      one(LshBucketName)(LshBucketExpr(_, nPlanes = 8)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      JaccardName,
-      exprs => { checkArity(JaccardName, 2, exprs)
-        JaccardExpr(exprs.head, exprs(1)) },
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      DotName,
-      exprs => { checkArity(DotName, 2, exprs)
-        DotExpr(exprs.head, exprs(1)) },
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      SimhashName,
-      one(SimhashName)(SimHashExpr(_)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      NfcName,
-      one(NfcName)(NfcNormalizeExpr(_)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      NearestSeedName,
-      exprs => { checkArity(NearestSeedName, 2, exprs)
-        NearestSeedExpr(exprs(0), exprs(1)) },
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      CanonicalUrlName,
-      one(CanonicalUrlName)(CanonicalUrlExpr(_)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      RegistrableDomainName,
-      one(RegistrableDomainName)(RegistrableDomainExpr(_)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      RobotsAllowedName,
-      exprs => { checkArity(RobotsAllowedName, 3, exprs)
-        RobotsAllowedExpr(exprs(0), exprs(1), exprs(2)) },
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      NGramHistName,
-      one(NGramHistName)(NGramHistExpr(_,
-        buckets = graft.queries.Curation5.NGramB,
-        prime = graft.ops.Hashing.P)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      InterUnionName,
-      exprs => { checkArity(InterUnionName, 2, exprs)
-        InterUnionExpr(exprs.head, exprs(1)) },
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      PosCloseName,
-      exprs => { checkArity(PosCloseName, 3, exprs)
-        PosCloseExpr(exprs(0), exprs(1), exprs(2)) },
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      WinnowFpName,
-      one(WinnowFpName)(WinnowFpExpr(_, window = 4)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      Hash32DistinctName,
-      one(Hash32DistinctName)(Hash32ArrayExpr(_, mode = 1)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      Hash32SortedName,
-      one(Hash32SortedName)(Hash32ArrayExpr(_, mode = 2)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      Hash32SortedDistinctName,
-      one(Hash32SortedDistinctName)(Hash32ArrayExpr(_, mode = 3)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      LangIdName,
-      one(LangIdName)(LangIdExpr(_)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      CdcChunksName,
-      one(CdcChunksName)(CdcChunksExpr(_)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      FingerprintName,
-      one(FingerprintName)(FingerprintExpr(_)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      CoverageStatsName,
-      exprs => { checkArity(CoverageStatsName, 4, exprs)
-        CoverageStatsExpr(exprs(0), exprs(1), exprs(2), exprs(3)) },
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      MultiscaleWindowsName,
-      one(MultiscaleWindowsName)(MultiscaleWindowsExpr(_,
-        tiers = graft.queries.Curation5.Tiers,
-        rollB = graft.queries.Curation5.RollB)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      HashedBucketsName,
-      one(HashedBucketsName)(HashedBucketsExpr(_, buckets = FeatureBuckets)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      HashedScoreName,
-      one(HashedScoreName)(HashedScoreExpr(_, buckets = FeatureBuckets)),
-      "built-in")
+  /** An aggregate's size parameter, which must be an integer literal. */
+  private def intLiteral(what: String, e: Expression): Int = e match {
+    case Literal(v: Number, _) => v.intValue()
+    case other => throw new IllegalArgumentException(
+      s"$what must be an integer literal, got $other")
   }
+
+  val specs: Seq[FunctionSpec] = Seq(
+    FunctionSpec(MinhashName, 1,
+      e => MinHashSignatureExpr(e(0), shingleK = 3, numHashes = 8)),
+    FunctionSpec(MinhashBandsName, 1, e => MinHashBandsExpr(e(0), numHashes = 8)),
+    FunctionSpec(ShinglesName, 1, e => ShingleSetExpr(e(0), shingleK = 3)),
+    FunctionSpec(ShingleExplodeName, 1, e => ShingleExplodeExpr(e(0), shingleK = 3)),
+    FunctionSpec(LshBucketName, 1, e => LshBucketExpr(e(0), nPlanes = 8)),
+    FunctionSpec(JaccardName, 2, e => JaccardExpr(e(0), e(1))),
+    FunctionSpec(DotName, 2, e => DotExpr(e(0), e(1))),
+    FunctionSpec(SimhashName, 1, e => SimHashExpr(e(0))),
+    FunctionSpec(NfcName, 1, e => NfcNormalizeExpr(e(0))),
+    FunctionSpec(NearestSeedName, 2, e => NearestSeedExpr(e(0), e(1))),
+    FunctionSpec(CanonicalUrlName, 1, e => CanonicalUrlExpr(e(0))),
+    FunctionSpec(RegistrableDomainName, 1, e => RegistrableDomainExpr(e(0))),
+    FunctionSpec(RobotsAllowedName, 3, e => RobotsAllowedExpr(e(0), e(1), e(2))),
+    FunctionSpec(NGramHistName, 1, e => NGramHistExpr(e(0),
+      buckets = graft.queries.Curation5.NGramB, prime = graft.ops.Hashing.P)),
+    FunctionSpec(InterUnionName, 2, e => InterUnionExpr(e(0), e(1))),
+    FunctionSpec(PosCloseName, 3, e => PosCloseExpr(e(0), e(1), e(2))),
+    FunctionSpec(WinnowFpName, 1, e => WinnowFpExpr(e(0), window = 4)),
+    FunctionSpec(Hash32DistinctName, 1, e => Hash32ArrayExpr(e(0), mode = 1)),
+    FunctionSpec(Hash32SortedName, 1, e => Hash32ArrayExpr(e(0), mode = 2)),
+    FunctionSpec(Hash32SortedDistinctName, 1, e => Hash32ArrayExpr(e(0), mode = 3)),
+    FunctionSpec(LangIdName, 1, e => LangIdExpr(e(0))),
+    FunctionSpec(CdcChunksName, 1, e => CdcChunksExpr(e(0))),
+    FunctionSpec(FingerprintName, 1, e => FingerprintExpr(e(0))),
+    FunctionSpec(CoverageStatsName, 4,
+      e => CoverageStatsExpr(e(0), e(1), e(2), e(3))),
+    FunctionSpec(MultiscaleWindowsName, 1, e => MultiscaleWindowsExpr(e(0),
+      tiers = graft.queries.Curation5.Tiers, rollB = graft.queries.Curation5.RollB)),
+    FunctionSpec(HashedBucketsName, 1,
+      e => HashedBucketsExpr(e(0), buckets = FeatureBuckets)),
+    FunctionSpec(HashedScoreName, 1,
+      e => HashedScoreExpr(e(0), buckets = FeatureBuckets)),
+    // the analyzer wraps a bare AggregateFunction into its
+    // AggregateExpression, exactly as for built-in aggregates
+    FunctionSpec(BloomGate.AggName, 3,
+      e => new BloomFilterAggregate(e(0), e(1), e(2))),
+    FunctionSpec(BloomGate.MightContainName, 2,
+      e => BloomFilterMightContain(e(0), e(1))),
+    FunctionSpec(GramMatrixAgg.Name, 2,
+      e => GramMatrixAgg(e(0), intLiteral("dims", e(1)))),
+    FunctionSpec(MisraGriesAgg.Name, 2,
+      e => MisraGriesAgg(e(0), intLiteral("capacity", e(1)))))
 
   /** 8-hash/3-shingle MinHash signature column. */
-  def minhashSignature(spark: SparkSession, c: Column): Column = {
-    register(spark)
+  def minhashSignature(spark: SparkSession, c: Column): Column =
     call_function(MinhashName, c)
-  }
 
   /** 4 LSH band values (8 hashes × r=2) from a shingle-array column. */
-  def minhashBands(spark: SparkSession, c: Column): Column = {
-    register(spark)
+  def minhashBands(spark: SparkSession, c: Column): Column =
     call_function(MinhashBandsName, c)
-  }
 
   /** Distinct 3-word shingle set column (imperative expression). */
-  def shingles(spark: SparkSession, c: Column): Column = {
-    register(spark)
+  def shingles(spark: SparkSession, c: Column): Column =
     call_function(ShinglesName, c)
-  }
 
   /** Generator column: one row per distinct 3-word shingle, streamed
     * (no intermediate array) — use in `select(col, explodeShingles(...))`
     * position like any explode.
     */
-  def explodeShingles(spark: SparkSession, c: Column): Column = {
-    register(spark)
+  def explodeShingles(spark: SparkSession, c: Column): Column =
     call_function(ShingleExplodeName, c)
-  }
 }

@@ -6,7 +6,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream,
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -149,27 +149,12 @@ case class MisraGriesAgg(
 
 object MisraGriesAgg {
 
+  /** SQL shape: `graft_mg_candidates(item, capacity_literal)`. */
   val Name = "graft_mg_candidates"
-
-  /** Registry route (the analyzer wraps a bare AggregateFunction into
-    * its AggregateExpression, exactly as for built-in aggregates).
-    * SQL shape: `graft_mg_candidates(item, capacity_literal)`.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name,
-      exprs => MisraGriesAgg(exprs.head, exprs(1) match {
-        case Literal(v: Number, _) => v.intValue()
-        case other => throw new IllegalArgumentException(
-          s"capacity must be an integer literal, got $other")
-      }),
-      "built-in")
 
   /** Column form for `agg(...)`: the sorted candidate items (a superset
     * of every item with frequency > n/(capacity+1)).
     */
-  def mgCandidates(spark: SparkSession, c: Column, capacity: Int): Column = {
-    register(spark)
+  def mgCandidates(spark: SparkSession, c: Column, capacity: Int): Column =
     call_function(Name, c, org.apache.spark.sql.functions.lit(capacity))
-  }
 }

@@ -55,10 +55,8 @@ case class NGramHistExpr(child: Expression, buckets: Int, prime: Long)
 }
 
 object NGramHist {
-  def apply(spark: SparkSession, c: Column): Column = {
-    GraftFunctions.register(spark)
+  def apply(spark: SparkSession, c: Column): Column =
     call_function(GraftFunctions.NGramHistName, c)
-  }
 }
 
 private[functions] object NGramHistState {

@@ -65,8 +65,6 @@ case class NearestSeedExpr(left: Expression, right: Expression)
 }
 
 object NearestSeed {
-  def apply(spark: SparkSession, e: Column, seeds: Column): Column = {
-    GraftFunctions.register(spark)
+  def apply(spark: SparkSession, e: Column, seeds: Column): Column =
     call_function(GraftFunctions.NearestSeedName, e, seeds)
-  }
 }

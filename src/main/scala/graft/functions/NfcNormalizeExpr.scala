@@ -46,8 +46,6 @@ case class NfcNormalizeExpr(child: Expression) extends UnaryExpression {
 }
 
 object NfcNormalize {
-  def apply(spark: SparkSession, text: Column): Column = {
-    GraftFunctions.register(spark)
+  def apply(spark: SparkSession, text: Column): Column =
     call_function(GraftFunctions.NfcName, text)
-  }
 }

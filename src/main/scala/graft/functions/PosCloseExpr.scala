@@ -37,8 +37,6 @@ case class PosCloseExpr(first: Expression, second: Expression,
 }
 
 object PosClose {
-  def apply(spark: SparkSession, a: Column, b: Column, d: Column): Column = {
-    GraftFunctions.register(spark)
+  def apply(spark: SparkSession, a: Column, b: Column, d: Column): Column =
     call_function(GraftFunctions.PosCloseName, a, b, d)
-  }
 }

@@ -32,8 +32,6 @@ case class SimHashExpr(child: Expression) extends UnaryExpression {
 }
 
 object SimHash {
-  def apply(spark: SparkSession, text: Column): Column = {
-    GraftFunctions.register(spark)
+  def apply(spark: SparkSession, text: Column): Column =
     call_function(GraftFunctions.SimhashName, text)
-  }
 }

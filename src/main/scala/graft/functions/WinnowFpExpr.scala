@@ -43,8 +43,6 @@ case class WinnowFpExpr(child: Expression, window: Int)
 }
 
 object WinnowFp {
-  def apply(spark: SparkSession, c: Column): Column = {
-    GraftFunctions.register(spark)
+  def apply(spark: SparkSession, c: Column): Column =
     call_function(GraftFunctions.WinnowFpName, c)
-  }
 }

@@ -2079,7 +2079,6 @@ object Crawl {
           order_md5
         FROM h ORDER BY host"""),
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         table(s, d, "documents")
           .createOrReplaceTempView("docs_frontier_v")
         s.sql("""

@@ -371,7 +371,6 @@ object Curation3 {
         FROM scored WHERE n_inter * 2 >= least(na, nb)
         ORDER BY containment DESC, a_id, b_id"""),
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         table(s, d, "documents")
           .createOrReplaceTempView("docs_contain_v")
         // SQL-native materialization (the localCheckpoint twin): CACHE

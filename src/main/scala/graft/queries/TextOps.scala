@@ -278,7 +278,6 @@ object TextOps {
           AND a.doc_id < b.doc_id
         GROUP BY a_id, b_id ORDER BY a_id, b_id"""),
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         table(s, d, "documents").createOrReplaceTempView("docs_sql_v")
         s.sql("""
           WITH bands AS (

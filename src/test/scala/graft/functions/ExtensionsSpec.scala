@@ -7,7 +7,7 @@ import graft.SparkSpec
   * conf — it binds at first-session construction, which is why the
   * shared test session carries it). `newSession()` gives a fresh
   * function registry, so resolution below can only come from the
-  * extension injection, never from a leftover runtime `register` call.
+  * extension injection.
   */
 class ExtensionsSpec extends SparkSpec {
 
@@ -70,10 +70,72 @@ class ExtensionsSpec extends SparkSpec {
       val e = intercept[Exception](fresh.sql(sql).head)
       assert(e.getMessage.contains("argument"), s"$sql -> ${e.getMessage}")
     }
-    // the runtime register() path carries the same gate
-    GraftFunctions.register(fresh)
-    val e2 = intercept[Exception](
-      fresh.sql("SELECT graft_shingles('a b c', 'extra')").head)
-    assert(e2.getMessage.contains("argument"), e2.getMessage)
+  }
+
+  /** One sample-argument row per [[GraftFunctions.specs]] entry, in
+    * table order: SQL argument texts over `range(1)` (column `id`), as
+    * many as the function's arity.
+    */
+  private val sampleArgs: Seq[(String, Seq[String])] = Seq(
+    "graft_minhash_signature" -> Seq("'one two three four'"),
+    "graft_minhash_bands" -> Seq("array('a b c', 'b c d')"),
+    "graft_shingles" -> Seq("'a b c d'"),
+    "graft_explode_shingles" -> Seq("'a b c d'"),
+    "graft_lsh_bucket" -> Seq("array(0.5D, -1.0D, 2.0D)"),
+    "graft_jaccard" -> Seq("array('a', 'b')", "array('b')"),
+    "graft_dot" -> Seq("array(1.0D, 2.0D)", "array(3.0D, 4.0D)"),
+    "graft_simhash" -> Seq("'a b c'"),
+    "graft_nfc" -> Seq("'Cafe\u0301'"),
+    "graft_nearest_seed" -> Seq("array(1.0D, 0.0D)",
+      "array(struct(7L, array(1.0D, 0.0D)), struct(9L, array(0.0D, 1.0D)))"),
+    "graft_canonical_url" -> Seq("'HTTP://Ex.TEST:80/a'"),
+    "graft_registrable_domain" -> Seq("'news.site.co.uk'"),
+    "graft_robots_allowed" ->
+      Seq("'User-agent: *\nDisallow: /p\n'", "'bot'", "'/p/x'"),
+    "graft_ngram_hist" -> Seq("'abcd'"),
+    "graft_inter_union" -> Seq("array('a', 'b')", "array('b', 'c')"),
+    "graft_pos_close" -> Seq("array(1L, 5L)", "array(3L)", "2L"),
+    "graft_winnow_fp" -> Seq("'a b c d e f g h'"),
+    "graft_hash32_distinct" -> Seq("array('a', 'b', 'a')"),
+    "graft_hash32_sorted" -> Seq("array('a', 'b', 'a')"),
+    "graft_hash32_sorted_distinct" -> Seq("array('a', 'b', 'a')"),
+    "graft_lang_id" -> Seq("'the cat and the dog'"),
+    "graft_cdc_chunks" -> Seq("'a b c d e f'"),
+    "graft_fingerprint" -> Seq("'abc'"),
+    "graft_coverage_stats" ->
+      Seq("array(1L, 2L)", "array(2L)", "array(3L)", "array(4L)"),
+    "graft_multiscale_windows" -> Seq("array('a', 'b', 'c')"),
+    "graft_hashed_buckets" -> Seq("'a b'"),
+    "graft_hashed_score" -> Seq("'a b'"),
+    "graft_bloom_agg" -> Seq("xxhash64(1L)", "100L", "1024L"),
+    // a column, not a literal, probe: the injected Spark expression
+    // fails codegen on a constant probe value, and BloomGate always
+    // probes a column
+    "graft_bloom_might_contain" -> Seq(
+      "(SELECT graft_bloom_agg(xxhash64(1L), 100L, 1024L))", "xxhash64(id)"),
+    "graft_gram_matrix" -> Seq("array(1.0D, 2.0D)", "2"),
+    "graft_mg_candidates" -> Seq("'a'", "4"))
+
+  test("every specs entry resolves in SQL text on a fresh session at its " +
+      "declared arity, and one argument more or fewer fails analysis") {
+    assert(sampleArgs.map(_._1) == GraftFunctions.specs.map(_.name))
+    val fresh = spark.newSession()
+    fresh.conf.set("spark.sql.codegen.fallback", "false")
+    for ((s, (_, args)) <- GraftFunctions.specs.zip(sampleArgs)) {
+      assert(args.length == s.arity, s.name)
+      def call(as: Seq[String]) =
+        s"SELECT ${s.name}(${as.mkString(", ")}) FROM range(1)"
+      val rows =
+        try fresh.sql(call(args)).collect()
+        catch { case t: Exception => fail(s"${call(args)} -> $t", t) }
+      assert(rows.nonEmpty, call(args))
+      val surplus = args :+ args.last
+      val short = if (args.nonEmpty) Seq(args.init) else Nil
+      for (wrong <- surplus +: short) {
+        val e = intercept[Exception](fresh.sql(call(wrong)).collect())
+        assert(e.getMessage.contains("argument"),
+          s"${call(wrong)} -> ${e.getMessage}")
+      }
+    }
   }
 }

@@ -88,7 +88,6 @@ class MisraGriesSpec extends SparkSpec {
   }
 
   test("non-string input fails at analysis, not mid-task") {
-    MisraGriesAgg.register(spark)
     val err = intercept[Exception] {
       spark.range(5).select(
         call_function(MisraGriesAgg.Name, col("id"), lit(8))).collect()
