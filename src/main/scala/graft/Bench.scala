@@ -97,8 +97,48 @@ import org.apache.spark.sql.SparkSession
   * stall bail as the main loop (ADVICE r15: a stall that begins after
   * a clean repin warm-up must not run every remaining solo rep at
   * stall duration).
+  *
+  * Layers: one [[Meter]] rides the session and every timed execution
+  * is one meter window, so the artifact's "layers" section holds, per
+  * query, what the engine reported for its last clean rep (the last
+  * rep when none is clean): jobs, stages, tasks, executor run and CPU
+  * time, GC, shuffle bytes written and read, spill, peak execution
+  * memory, plan build time, the Exchange nodes and interpreted lambdas
+  * of the executed plans, and the micro-batches of streaming drains.
+  * Resumed queries carry no record.
   */
 object Bench {
+
+  /** One timed execution: wall seconds, whether the stall watchdog
+    * fired, and what [[Meter]] saw in its window.
+    */
+  final case class Reading(secs: Double, stalled: Boolean, layers: Layers)
+
+  /** One untimed warm-up, then up to `n` timed reps of query `name`
+    * under the stall guard, each in its own meter window. The reps stop
+    * at the first stalled one (ADVICE r15: a stall that begins after a
+    * clean warm-up must not run every remaining rep at stall duration);
+    * a stalled warm-up is returned as the lone reading — a stall is box
+    * weather, more reps of it are not data.
+    */
+  def timedReps(spark: SparkSession, meter: Meter, sfDir: String,
+      name: String, capSec: Double, n: Int): Seq[Reading] = {
+    val fn = SparkEntry.queries(name)
+    def run(): Reading = {
+      val (secs, stalled) = StallGuard.timedRun(spark, name, capSec) {
+        fn(spark, sfDir).count(): Unit
+      }
+      Reading(secs, stalled, meter.take())
+    }
+    val warm = run()
+    if (warm.stalled) Seq(warm)
+    else {
+      val acc = scala.collection.mutable.ArrayBuffer.empty[Reading]
+      while (acc.size < n && !acc.lastOption.exists(_.stalled)) acc += run()
+      acc.toSeq
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -110,26 +150,14 @@ object Bench {
     val boardT0 = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - boardT0) / 1e9
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // same extensions as Verify: benched plans = shipped plans
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // NOTE: forcing small file splits (spark.sql.files.maxPartitionBytes
-      // = 2m) to parallelize the single ~20 MB-per-table scans was
-      // measured SLOWER here (23.4s vs 19.5s total): per-split scheduling
-      // and footer overhead beats scan parallelism at this scale. The
-      // default split size stays; on a real cluster the same knob is
-      // sized to executor memory, not to core count.
-      // shuffle/spill files ride the same tmpfs-preferring scratch
-      // root as streaming checkpoints (Common.scratchRoot — a
-      // throttled local volume must not masquerade as engine cost)
-      .config("spark.local.dir",
-        graft.queries.Common.scratchRoot + "/graft_spark_local")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // NOTE: forcing small file splits (spark.sql.files.maxPartitionBytes
+    // = 2m) to parallelize the single ~20 MB-per-table scans was
+    // measured SLOWER here (23.4s vs 19.5s total): per-split scheduling
+    // and footer overhead beats scan parallelism at this scale. The
+    // default split size stays; on a real cluster the same knob is
+    // sized to executor memory, not to core count.
+    val spark = graft.queries.Common.localSession(cpus)
+    val meter = new Meter(spark).attach()
 
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
@@ -210,7 +238,7 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
 
     // ---- shared mutable board state (main loop writes, flush reads).
-    // ALL of results/degraded/repinned/stalled are guarded by the ONE
+    // ALL of results/degraded/repinned/stalled/layers are guarded by the ONE
     // `results` monitor — the shutdown hook renders on its own thread
     // while the main loop may be mid-append, and mixed locks let the
     // partial-flush path iterate an ArrayBuffer mid-append (ADVICE r14).
@@ -221,6 +249,7 @@ object Bench {
     val resumed = scala.collection.mutable.ArrayBuffer.empty[String]
     val repinned = scala.collection.mutable.ArrayBuffer
       .empty[(String, (Double, Double, Double, Seq[Double]))]
+    val layers = scala.collection.mutable.ArrayBuffer.empty[(String, Layers)]
     val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
 
     // ---- resume mode (VERDICT-r15 item 1d): pre-load every query a
@@ -283,7 +312,10 @@ object Bench {
         k -> (s"""{"prior":$p,"sequence":$seqMed,"solo":$solo,""" +
           s""""solo_reps":${ts.map(fmt3).mkString("[", ",", "]")}}""") })},""" +
       s""""failed":[${failed.mkString(",")}],""" +
-      s""""not_run":[${notRun.mkString(",")}]}"""
+      s""""not_run":[${notRun.mkString(",")}],""" +
+      // last: its values are maps, and the resume scrapers above read
+      // the first '}' after a section's '{'
+      s""""layers":${jmap(layers.toSeq.map { case (k, l) => k -> jmap(l.attrs) })}}"""
     }
     def renderStdout(partial: Boolean): String = results.synchronized {
       val ran = results.map(_._1).toSet
@@ -344,12 +376,6 @@ object Bench {
       val p = priorOf(name)
       if (p > 0) math.max(30.0, 10.0 * p) else 300.0
     }
-    def timedRun(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        capSec: Double): (Double, Boolean) =
-      StallGuard.timedRun(spark, name, capSec) {
-        fn(spark, sfDir).count(): Unit
-      }
     def unpersistAll(): Unit =
       // Storage hygiene between queries (round-13): localCheckpoint
       // blocks live in the SAME unified memory pool that execution
@@ -394,48 +420,30 @@ object Bench {
     val calibSet = toRun.filter(priorOf(_) > 0).take(5).toSet
 
     /** Run one query with `repsHere` planned reps; records results/
-      * degraded/stalled and returns the clean-rep medians for
+      * degraded/stalled/layers and returns the clean-rep medians for
       * calibration use. Median excludes stalled reps when any clean
       * rep exists (ADVICE r15); queries_reps keeps every reading.
       */
     def runQuery(name: String, repsHere: Int): Option[Double] = {
-      val fn = SparkEntry.queries(name)
       if (repsHere < reps) results.synchronized {
         degraded += ((name, repsHere)) }
-      val cap = stallCapOf(name)
       val entry =
         try {
-          val (warmT, warmStalled) = timedRun(name, fn, cap)
-          val times =
-            if (warmStalled) {
-              // the warm-up itself stalled: record the capped reading
-              // as the lone (stalled) datum and move on — a stall is
-              // box weather; more reps of it are not data
-              results.synchronized { stalled += name }
-              Seq(warmT)
-            } else {
-              val acc = scala.collection.mutable.ArrayBuffer.empty[Double]
-              var i = 0
-              var bail = false
-              while (i < repsHere && !bail) {
-                val (t, wasStalled) = timedRun(name, fn, cap)
-                acc += t
-                if (wasStalled) {
-                  results.synchronized { stalled += name }
-                  bail = true
-                }
-                i += 1
-              }
-              acc.toSeq
-            }
+          val readings = timedReps(spark, meter, sfDir, name,
+            stallCapOf(name), repsHere)
           unpersistAll()
           // stalled reps sit in queries_reps for transparency but are
           // excluded from the median/min when a clean rep exists — a
           // cancelled-at-cap reading is a floor on the stall, not a
           // measurement of the plan
-          val clean = times.filter(_ <= cap)
-          val forStats = if (clean.nonEmpty) clean else times
-          (median(forStats), forStats.min, forStats.max, times)
+          val clean = readings.filterNot(_.stalled)
+          val forStats = if (clean.nonEmpty) clean else readings
+          val times = forStats.map(_.secs)
+          results.synchronized {
+            if (clean.size < readings.size) stalled += name
+            layers += ((name, forStats.last.layers))
+          }
+          (median(times), times.min, times.max, readings.map(_.secs))
         } catch {
           case e: Throwable =>
             // loud failure: a crashed query must read as a regression,
@@ -495,32 +503,14 @@ object Bench {
     for (name <- movers if elapsed < budgetSec * 1.05) {
       System.err.println(s"[bench] repin $name: sequence median moved " +
         s"vs blessed prior ${priorOf(name)}")
-      val fn = SparkEntry.queries(name)
       val repinReps = if (elapsed > budgetSec * 0.85) 2 else reps
-      val repinCap = stallCapOf(name)
-      // per-rep stall bail, same discipline as the main loop (ADVICE
-      // r15: Seq.fill ran every remaining rep at stall duration when
-      // the stall began after a clean warm-up)
+      // stalled solo reps are no data: only clean reps are kept
       val times =
         try {
-          val (warmT, warmStalled) = timedRun(name, fn, repinCap)
-          if (warmStalled) {
-            results.synchronized { stalled += name }
-            Seq.empty[Double] // stalled solo = no data
-          } else {
-            val acc = scala.collection.mutable.ArrayBuffer.empty[Double]
-            var i = 0
-            var bail = false
-            while (i < repinReps && !bail) {
-              val (t, wasStalled) = timedRun(name, fn, repinCap)
-              if (wasStalled) {
-                results.synchronized { stalled += name }
-                bail = true
-              } else acc += t
-              i += 1
-            }
-            acc.toSeq
-          }
+          val readings = timedReps(spark, meter, sfDir, name,
+            stallCapOf(name), repinReps)
+          if (readings.exists(_.stalled)) results.synchronized { stalled += name }
+          readings.filterNot(_.stalled).map(_.secs)
         } catch { case _: Throwable => Seq.empty[Double] }
       unpersistAll()
       val seqMed = results.synchronized { results.toMap.apply(name)._1 }

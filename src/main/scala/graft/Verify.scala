@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,23 +12,11 @@ object Verify {
     // dev-only: optional comma-separated filter to re-verify a subset
     val only = if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the engine's own sessions carry its extensions: custom SQL
-      // functions + the TopK strategy (incl. the row_number-top-k
-      // auto-route), so the correctness gate exercises the same plans
-      // a library user gets
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // shuffle/spill files ride the same tmpfs-preferring scratch
-      // root as streaming checkpoints (Common.scratchRoot — a
-      // throttled local volume must not masquerade as engine cost)
-      .config("spark.local.dir",
-        graft.queries.Common.scratchRoot + "/graft_spark_local")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the engine's own session carries its extensions: custom SQL
+    // functions + the TopK strategy (incl. the row_number-top-k
+    // auto-route), so the correctness gate exercises the same plans a
+    // library user gets
+    val spark = graft.queries.Common.localSession(cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -175,6 +175,27 @@ object Common {
       else sys.props("java.io.tmpdir")
     }
 
+  /** The session the repo's own mains run on: `local[cpus]` with `cpus`
+    * shuffle partitions, UTC, the graft extensions (so benched and
+    * verified plans are the shipped plans), no UI and WARN logs.
+    * Shuffle and spill files ride [[scratchRoot]] like the streaming
+    * checkpoints — a throttled local volume must not masquerade as
+    * engine cost. `extra` confs are set on top.
+    */
+  def localSession(cpus: String, extra: (String, String)*): SparkSession = {
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.local.dir", scratchRoot + "/graft_spark_local")
+      .config("spark.ui.enabled", "false")
+    val spark = extra.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** localCheckpoint at MEMORY_AND_DISK_SER — for CORPUS-SIZED pinned
     * frames (the per-token-position (id, hash) families: q150/q154/
     * q159/q162/q194/q271/q280 and the n-gram histograms). Plain

@@ -228,18 +228,6 @@ object Curation6 {
     * probe entry (tools/ScaleProbe r24 feeds decorrelated replicas).
     */
   private[graft] def exactDupFrom(docs: DataFrame): DataFrame = {
-    // Env-gated per-round timing/row-count trace (dev probe only; the
-    // counts it forces are extra jobs, so it must stay OFF in bench).
-    val trace = sys.env.contains("SPARK_GRAFT_Q280_TRACE")
-    def traced(tag: String)(df: DataFrame): DataFrame = {
-      if (trace) {
-        val t0 = System.nanoTime()
-        val n = df.count()
-        System.err.println(
-          f"[q280] $tag%-14s rows=$n%8d  count-wall=${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      }
-      df
-    }
     val docsH = docs
       .select(col("doc_id"), words(col("text")).as("ws"))
       .filter(size(col("ws")) >= 1)
@@ -277,7 +265,6 @@ object Curation6 {
     var r = 0
     var done = false
     while (r < Rounds && !done) {
-      val rt0 = System.nanoTime()
       val off = r * BlockLen
       // narrow per-round frame: (doc_id, pos, rem, ngA, ngB, best, full)
       val resolved =
@@ -302,17 +289,14 @@ object Curation6 {
             .select(col("doc_id"), col("pos"), col("rem"),
               col("ngA"), col("ngB"), col("best"), col("full")))
         }
-      if (trace) System.err.println(
-        f"[q280] r$r resolved built at ${(System.nanoTime() - rt0) / 1e9}%6.2f s")
       // a row dies here when its block is short OR no subgroup partner
       dead += resolved.filter(!col("full") || col("best") < BlockLen)
         .select(col("doc_id"),
           (lit(off.toLong) + col("best")).as("maxdup"),
           lit(0).as("sat"))
-      tied = traced(s"r$r tied")(
-        resolved.filter(col("full") && col("best") === BlockLen)
-          .select(col("doc_id"), col("pos"), col("rem"),
-            col("ngA").as("gA"), col("ngB").as("gB")))
+      tied = resolved.filter(col("full") && col("best") === BlockLen)
+        .select(col("doc_id"), col("pos"), col("rem"),
+          col("ngA").as("gA"), col("ngB").as("gB"))
       // early exit: natural text decays the tied set geometrically;
       // once it is EMPTY the remaining rounds compute nothing but
       // would still pay join/window/checkpoint scheduling. The probe

@@ -607,12 +607,6 @@ ${Vectors.latScalarSql("""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
     */
   private def annGraph(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    // env-gated phase trace (dev probe only — extra prints, no extra
-    // jobs: the phases below are all checkpoint-terminated = eager)
-    val trace = sys.env.contains("SPARK_GRAFT_Q281_TRACE")
-    val tr0 = System.nanoTime()
-    def mark(tag: String): Unit = if (trace) System.err.println(
-      f"[q281] $tag%-18s at ${(System.nanoTime() - tr0) / 1e9}%6.2f s")
     // the vector frame feeds ~15 consumers (probe sides, per-round
     // scoring joins, query/entry/mate frames, per-hop rescoring) —
     // checkpoint (serialized) or each consumer re-reads + re-buckets
@@ -665,7 +659,6 @@ ${Vectors.latScalarSql("""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
           GraphSeedCap).as("ids"))
         .select(explode(col("ids")).as("cid"))
     }
-    mark("v ready")
     val nsideCap = nside.join(broadcast(cappedIds),
       col("n_id") === col("cid")).drop("cid")
     val probeArr = array(ProbeMasks.map(m =>
@@ -682,7 +675,6 @@ ${Vectors.latScalarSql("""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
           Vectors.cosinePre(graft.functions.Dot(s, col("e"), col("ne")),
             col("nrm"), col("nn")).as("cs"))
       var knn = topM(pairs)
-      mark("seed knn")
       // ---- NN-descent refinement: neighbors ∪ nbrs-of-nbrs
       for (r <- 1 to NdRounds) {
         val sym = knn
@@ -695,14 +687,12 @@ ${Vectors.latScalarSql("""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
           .union(sym)
           .distinct()
         knn = topM(scorePairs(cand))
-        mark(s"nd round $r")
       }
       knn
         .union(knn.select(col("dst").as("src"), col("src").as("dst")))
         .distinct()
         .localCheckpoint() // small; walked GraphHops times
     }
-    mark("edges ready")
     // ---- search (restructured r17, VERDICT-r16 item 1: the hops were
     // ~10 AQE-replanned tiny stages — pure scheduling, not data).
     // Three scheduling cuts, all scale-neutral:
@@ -751,11 +741,9 @@ ${Vectors.latScalarSql("""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
         beam = score(cand).withColumn("rn", row_number().over(wq))
           .filter(col("rn") <= GraphBeam).drop("rn")
           .localCheckpoint()
-        mark(s"hop $h")
       }
       beam
     }
-    mark("search done")
     val wqF = Window.partitionBy("q_id").orderBy(col("cs").desc, col("n_id"))
     search.filter(col("n_id") =!= col("q_id"))
       .withColumn("rn", row_number().over(wqF).cast("long"))

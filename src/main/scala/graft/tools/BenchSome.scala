@@ -1,9 +1,9 @@
-// Dev tool: Bench-identical timing (warm-up + timed run) for NAMED
-// queries only, for iterating on individual plans without the full run.
+// Dev tool: Bench-identical timing (warm-up + one timed rep, the same
+// meter window) for NAMED queries only, for iterating on individual
+// plans without the full run. Prints each query's wall time next to
+// its `layers` record.
 // Usage: sbt "runMain graft.tools.BenchSome q67_dup_clusters ..."
 package graft.tools
-
-import org.apache.spark.sql.SparkSession
 
 object BenchSome {
   def main(args: Array[String]): Unit = {
@@ -11,27 +11,14 @@ object BenchSome {
     // same default as Bench so out-of-the-box numbers are comparable;
     // the driver's recorded runs set SPARK_GRAFT_CPUS=32 explicitly
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      // shuffle/spill files ride the same tmpfs-preferring scratch
-      // root as streaming checkpoints (Common.scratchRoot — a
-      // throttled local volume must not masquerade as engine cost)
-      .config("spark.local.dir",
-        graft.queries.Common.scratchRoot + "/graft_spark_local")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.queries.Common.localSession(cpus)
+    val meter = new graft.Meter(spark).attach()
     args.foreach { name =>
-      val fn = graft.SparkEntry.queries(name)
-      def run(): Long = fn(spark, sfDir).count()
-      run() // warm-up, same as Bench
-      val t0 = System.nanoTime()
-      val n = run()
-      println(f"[bench-some] $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.3f s  ($n rows)")
+      // Bench's no-prior stall cap
+      val r = graft.Bench.timedReps(spark, meter, sfDir, name, 300.0, 1).last
+      val layers = r.layers.attrs.map { case (k, v) => s"$k=$v" }.mkString(" ")
+      println(f"[bench-some] $name%-28s ${r.secs}%8.3f s" +
+        (if (r.stalled) "  STALLED" else "") + s"  $layers")
     }
     spark.stop()
   }

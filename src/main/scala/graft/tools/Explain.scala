@@ -2,18 +2,10 @@
 // Usage: sbt "runMain graft.tools.Explain q34_minhash_lsh_pairs ..."
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.queries.Common.localSession("8")
     // "exec:<name>" runs the query first so the printed AQE plan is the
     // final runtime plan (shows ReusedExchange/ReusedQueryStage decisions).
     args.foreach { arg =>

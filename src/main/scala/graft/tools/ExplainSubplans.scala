@@ -7,19 +7,12 @@
 // oracle and the specs referee that; this shows the operator diff).
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 object ExplainSubplans {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.queries.Common.localSession("8")
     val docs = graft.queries.Common.table(spark, sfDir, "documents")
     val P = graft.ops.Hashing.P
     val B = graft.queries.Curation5.NGramB

@@ -5,16 +5,7 @@ package graft.tools
 object ProbeRecall {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.local.dir",
-        graft.queries.Common.scratchRoot + "/graft_spark_local")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.queries.Common.localSession(cpus)
     import spark.implicits._
     val dirs = sys.env.getOrElse("SPARK_GRAFT_SF_DIRS",
       "/root/testdata/sf0.001,/root/testdata/sf0.01,/root/testdata/sf0.1")

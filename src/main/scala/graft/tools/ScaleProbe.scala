@@ -1,16 +1,13 @@
 // Dev tool: scale probe — replicates lineitem/documents by
 // SPARK_GRAFT_MULT (comma list, e.g. "1,10,100") and, for each headline
-// plan shape, reports wall time AND shuffle volume (bytes + records via
-// a task-metrics listener). Wall time on local[32] conflates CPU
-// contention; shuffle volume is the number that predicts 1000-executor
+// plan shape, reports wall time AND shuffle volume (bytes + records
+// from graft.Meter). Wall time on local[32] conflates CPU contention;
+// shuffle volume is the number that predicts 1000-executor
 // behavior — a plan whose shuffle grows super-linearly in the multiplier
 // is the one that dies at 100 TB.
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,51 +15,24 @@ import graft.queries.Common._
 
 object ScaleProbe {
 
-  private class ShuffleMeter extends SparkListener {
-    val bytes = new AtomicLong
-    val records = new AtomicLong
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-      }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val mults = sys.env.getOrElse("SPARK_GRAFT_MULT", "10")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      // unlike Bench (which reads each ~20 MB table as one split — faster
-      // there), the probe MUST split the base tables: the replicated
-      // frames inherit the scan's partitioning, and a single-split scan
-      // would serialize the whole probe into one task, measuring nothing
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // shuffle/spill files ride the same tmpfs-preferring scratch
-      // root as streaming checkpoints (Common.scratchRoot — a
-      // throttled local volume must not masquerade as engine cost)
-      .config("spark.local.dir",
-        graft.queries.Common.scratchRoot + "/graft_spark_local")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
+    // unlike Bench (which reads each ~20 MB table as one split — faster
+    // there), the probe MUST split the base tables: the replicated
+    // frames inherit the scan's partitioning, and a single-split scan
+    // would serialize the whole probe into one task, measuring nothing
+    val spark = localSession("32", "spark.sql.files.maxPartitionBytes" -> "2m")
+    val meter = new graft.Meter(spark).attach()
 
     def time(label: String)(f: => Long): Unit = {
-      Thread.sleep(300) // let the async listener bus drain the last probe
-      val b0 = meter.bytes.get; val r0 = meter.records.get
+      meter.take() // close the window on everything before this probe
       val t0 = System.nanoTime(); val n = f
       val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500)
-      val mb = (meter.bytes.get - b0) / 1e6
-      val recs = meter.records.get - r0
+      val shuffled = meter.take()
+      val mb = shuffled.shuffleWriteBytes / 1e6
+      val recs = shuffled.shuffleWriteRecords
       println(f"[scale] $label%-30s ${secs}%7.2f s  ${mb}%10.1f MB shuffled  ${recs}%12d rows shuffled  ($n rows out)")
     }
 

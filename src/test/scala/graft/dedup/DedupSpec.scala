@@ -231,11 +231,11 @@ class DedupSpec extends SparkSpec {
         override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
           jobs.incrementAndGet()
       }
-      org.apache.spark.TestListenerBus.drain(sc)
+      org.apache.spark.GraftBus.drain(sc)
       sc.addSparkListener(counter)
       try {
         clusters.collect()
-        org.apache.spark.TestListenerBus.drain(sc)
+        org.apache.spark.GraftBus.drain(sc)
       } finally sc.removeSparkListener(counter)
       jobs.get
     }
