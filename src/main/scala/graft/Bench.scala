@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): times every declared query at
@@ -176,39 +178,22 @@ object Bench {
       if (java.nio.file.Files.isReadable(blessed)) blessed.toString
       else fullOut
     }
-    // Tolerant single-level JSON-map scrapers (no JSON lib on the
-    // classpath by design): "section": { "k": <num>, ... } and
-    // "section": { "k": [nums], ... }. Both rely on the renderFull
-    // invariant that map bodies nest no '}'.
-    def scrapeNumMap(txt: String, section: String): Map[String, Double] = {
-      val at = txt.indexOf("\"" + section + "\":")
-      if (at < 0) Map.empty
-      else {
-        val open = txt.indexOf('{', at)
-        if (open < 0) Map.empty
-        else {
-          val body = txt.substring(open + 1, txt.indexOf('}', open))
-          "\"([^\"]+)\":\\s*(-?[0-9.Ee+-]+)".r.findAllMatchIn(body)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }
-      }
-    }
-    def scrapeArrMap(txt: String, section: String): Map[String, Seq[Double]] = {
-      val at = txt.indexOf("\"" + section + "\":")
-      if (at < 0) Map.empty
-      else {
-        val open = txt.indexOf('{', at)
-        if (open < 0) Map.empty
-        else {
-          val body = txt.substring(open + 1, txt.indexOf('}', open))
-          "\"([^\"]+)\":\\s*\\[([^\\]]*)\\]".r.findAllMatchIn(body)
-            .map { m =>
-              m.group(1) -> m.group(2).split(',').toSeq
-                .map(_.trim).filter(_.nonEmpty).map(_.toDouble)
-            }.toMap
-        }
-      }
-    }
+    // The "section": {"k": <num> | [nums], ...} maps of a prior
+    // artifact, found at any depth (a wrapped board nests them);
+    // a file that is not JSON yields none.
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def sectionOf(txt: String, section: String)
+        : Seq[(String, com.fasterxml.jackson.databind.JsonNode)] =
+      try Option(mapper.readTree(txt).findValue(section)).toSeq
+        .flatMap(_.properties().asScala.map(e => e.getKey -> e.getValue))
+      catch { case _: java.io.IOException => Nil }
+    def scrapeNumMap(txt: String, section: String): Map[String, Double] =
+      sectionOf(txt, section).collect {
+        case (k, v) if v.isNumber => k -> v.asDouble }.toMap
+    def scrapeArrMap(txt: String, section: String): Map[String, Seq[Double]] =
+      sectionOf(txt, section).collect {
+        case (k, v) if v.isArray => k -> v.elements().asScala.map(_.asDouble).toSeq
+      }.toMap
     def readText(path: String): Option[String] =
       try Some(new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(path)), "UTF-8"))
@@ -313,8 +298,6 @@ object Bench {
           s""""solo_reps":${ts.map(fmt3).mkString("[", ",", "]")}}""") })},""" +
       s""""failed":[${failed.mkString(",")}],""" +
       s""""not_run":[${notRun.mkString(",")}],""" +
-      // last: its values are maps, and the resume scrapers above read
-      // the first '}' after a section's '{'
       s""""layers":${jmap(layers.toSeq.map { case (k, l) => k -> jmap(l.attrs) })}}"""
     }
     def renderStdout(partial: Boolean): String = results.synchronized {

@@ -1,8 +1,11 @@
 package graft.qbo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
+
+import graft.sources.{QboPagePartition, QboTable}
 
 /** QBO entity-query source (SURVEY §2.1 S2-S4).
   *
@@ -11,11 +14,13 @@ import org.apache.spark.sql.types._
   * a page as one `QueryResponse` envelope JSON; the fetch loop lives in
   * [[fetchAll]] behind the [[QboApi]] trait (so a live HTTP client can
   * plug in, and tests use a fake), and the structuring lives in
-  * [[entityFrame]] — declared-schema JSON parsing, no inference pass.
+  * [[entityFrame]] — one declared-schema parse per page, no inference
+  * pass.
   *
   * Scale note: with a real paginated API the pages become input
-  * partitions (each executor task fetches its own page range); here the
-  * page envelopes are already strings, and parsing is distributed.
+  * partitions (each executor task fetches its own page range — the
+  * `qbo` source's strided fan-out); here the page envelopes are
+  * already strings, one input partition each.
   */
 trait QboApi {
   /** One page of entity-query results, 1-based start position. */
@@ -64,8 +69,19 @@ object QboSource {
     if (arr.isArray) arr.size() else 0
   }
 
+  /** The one declared shape of an entity-query page:
+    * `struct<QueryResponse: struct<<entity>: array<schema>>>`. The `qbo`
+    * DSv2 reader parses every page against it once, whatever fed the
+    * page: fixtures, registry feeds, HTTP or [[fetchAll]].
+    */
+  def envelope(entity: String, schema: StructType): StructType =
+    StructType(Seq(StructField("QueryResponse",
+      StructType(Seq(StructField(entity, ArrayType(schema)))))))
+
   /** Page envelopes → one entity row per element (union of pages = the
-    * reference's `all_data.extend(page)`, SURVEY §2.6 set-op analog).
+    * reference's `all_data.extend(page)`, SURVEY §2.6 set-op analog),
+    * through the `qbo` DSv2 scan with one partition per page — so
+    * column pruning and `TxnDate` pushdown apply here as well.
     *
     * Schema-drift policy (the dynamic layer-1 schema of SURVEY §1,
     * declared here and pinned by QboSourceSpec):
@@ -76,33 +92,14 @@ object QboSource {
     *    cast layer's null handling (fillna / try_cast), same as an
     *    absent optional struct;
     *  - a MALFORMED page (invalid JSON, or type drift that defeats the
-    *    declared-schema parse) is a LOUD error, never a silently-empty
-    *    page: the corrupt-record column feeds a raise_error guard that
-    *    fires inside the scan, because the alternative — PERMISSIVE's
-    *    null envelope — would explode to zero rows and truncate the
-    *    load invisibly (the worst failure mode for a full-refresh
-    *    pipeline: TRUNCATE + partial reload).
+    *    declared-schema parse) is a LOUD error inside the scan, never a
+    *    silently-empty page or a silently-nulled field: a null envelope
+    *    would read as zero rows and truncate the load invisibly (the
+    *    worst failure mode for a full-refresh pipeline: TRUNCATE +
+    *    partial reload).
     */
   def entityFrame(spark: SparkSession, entity: String, pages: Seq[String],
-      schema: StructType): DataFrame = {
-    import spark.implicits._
-    val corruptCol = "_graft_corrupt_record"
-    val envelope = StructType(Seq(StructField("QueryResponse", StructType(Seq(
-      StructField(entity, ArrayType(schema)),
-      StructField("maxResults", IntegerType),
-      StructField("startPosition", IntegerType)))),
-      StructField(corruptCol, StringType)))
-    spark.read.schema(envelope)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", corruptCol)
-      .json(spark.createDataset(pages))
-      // the guard lives in a filter so column pruning cannot drop it
-      .filter(when(col(corruptCol).isNotNull,
-        raise_error(concat(
-          lit(s"QBO $entity page failed the declared-schema parse: "),
-          substring(col(corruptCol), 1, 200))))
-        .otherwise(lit(true)))
-      .select(explode(col(s"QueryResponse.`$entity`")).as("e"))
-      .select("e.*")
-  }
+      schema: StructType): DataFrame =
+    Bridge.ofRows(spark, DataSourceV2Relation.create(
+      new QboTable(schema, entity, pages.map(QboPagePartition)), None, None))
 }

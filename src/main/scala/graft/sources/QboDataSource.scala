@@ -3,23 +3,26 @@ package graft.sources
 import java.util
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, JsonToStructs, Literal}
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JacksonParser, JSONOptions}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, IsNotNull, LessThan, LessThanOrEqual}
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.qbo.Schemas
+import graft.qbo.{QboSource, Schemas}
 
 /** DataSource V2 implementation of the QBO entity-query source
   * (SURVEY §2.1 S2-S4): `spark.read.format("qbo").option("entity",
-  * "Bill")`.
+  * "Bill")`. It is the one entity ingest path: [[QboSource.entityFrame]]
+  * builds the same scan over a driver-held page list.
   *
   * Architecture (the point of doing this as DSv2 rather than a driver
   * loop):
@@ -27,16 +30,22 @@ import graft.qbo.Schemas
   *    in parallel executor tasks, not serially on the driver (the
   *    reference pages serially at 100 rows/request);
   *  - column pruning is pushed into the source
-  *    ([[SupportsPushDownRequiredColumns]]): the JSON parser only
-  *    materializes requested fields — and a live Reports-API client
-  *    would translate the same pruned schema into the `columns=` query
-  *    parameter (S7, the reference's only server-side projection);
-  *  - page JSON → [[InternalRow]] via Catalyst's own `JsonToStructs`,
-  *    so parsing semantics match `from_json` exactly.
+  *    ([[SupportsPushDownRequiredColumns]]): the scan emits only the
+  *    requested fields — and a live Reports-API client would translate
+  *    the same pruned schema into the `columns=` query parameter (S7,
+  *    the reference's only server-side projection);
+  *  - one parse per page, loud on drift: Catalyst's own JSON parser
+  *    (the one behind `from_json`) reads the whole page against the
+  *    [[QboSource.envelope]] schema in FAILFAST mode and the rows come
+  *    straight out of its entity array. A page that defeats the
+  *    declared schema — invalid JSON, or a field whose type drifted,
+  *    read by the query or not — fails the scan with "QBO <Entity>
+  *    page failed the declared-schema parse"; it never nulls the
+  *    drifted field.
   *
   * Offline backends register page lists in [[QboPageFeeds]] (option
-  * `feed`); a live HTTP backend would implement the same page-iterator
-  * contract against `/v3/company/{realm}/query`.
+  * `feed`); the HTTP backend ([[QboHttpFeedConfig]]) implements the
+  * same page-iterator contract against `/v3/company/{realm}/query`.
   */
 class QboDataSource extends TableProvider with DataSourceRegister {
 
@@ -59,9 +68,40 @@ class QboDataSource extends TableProvider with DataSourceRegister {
         req("tokenUrl"), req("clientId"), req("clientSecret"),
         req("refreshToken"))
     }
-    new QboTable(schema, properties.get("entity"), properties.get("feed"),
-      Option(properties.get("fetchPartitions")).map(_.toInt).getOrElse(1),
-      http)
+    val fetchPartitions =
+      Option(properties.get("fetchPartitions")).map(_.toInt).getOrElse(1)
+    /* Two page→partition strategies:
+     *  - default (`fetchPartitions` ≤ 1, registry backend): the feed's
+     *    known page list, one page per partition — right when pages
+     *    are already local strings (fixtures) or the page count is
+     *    known;
+     *  - speculative fan-out (`fetchPartitions` = P > 1, or ANY http
+     *    backend — its page count is unknowable driver-side): P
+     *    strided partitions, each carrying a serialized
+     *    [[QboPageFetcher]]; partition k FETCHES pages k, k+P, k+2P, …
+     *    at read time inside its executor task and stops at the first
+     *    past-the-end page. No coordination, every page covered
+     *    exactly once, ≤ P wasted probe requests total — this is how
+     *    a live paginated API scales its ingest with executors
+     *    instead of the reference's one-page-at-a-time driver loop
+     *    (`qb_billpayments.py:66-79`).
+     */
+    val partitions: Seq[InputPartition] =
+      if (fetchPartitions > 1 || http.isDefined) {
+        val p = fetchPartitions.max(1)
+        // structural config checks are location-independent — run them
+        // HERE so a malformed endpoint/credential set fails the PLAN,
+        // before any task launches (executor-side createReader
+        // validation alone surfaces as task retries).
+        // The registry fetcher's validate stays executor-side only:
+        // its question — is the fixture registry populated in THIS
+        // JVM — is exactly per-JVM.
+        http.foreach(_.validate())
+        val fetcher: QboPageFetcher =
+          http.getOrElse(QboRegistryFetcher(properties.get("feed")))
+        (1 to p).map(QboStridePartition(_, p, fetcher))
+      } else QboPageFeeds.pages(properties.get("feed")).map(QboPagePartition)
+    new QboTable(schema, properties.get("entity"), partitions)
   }
 }
 
@@ -126,11 +166,11 @@ object QboPageFeeds {
     calls.get(name).map(_.get()).getOrElse(0)
 
   /** Page-at-a-time access for the parallel-fetch path: None past the
-    * end of the feed. A live HTTP backend implements the same contract
-    * by translating `idx` to `STARTPOSITION (idx-1)*100+1` and
-    * returning None on an empty/short-terminated page (every full page
-    * of the real API is exactly 100 rows, so the position arithmetic
-    * is exact — SURVEY §2.1 S3/S4).
+    * end of the feed. The HTTP backend ([[QboHttpFeedConfig]]) covers
+    * the same pages by translating `idx` to `STARTPOSITION
+    * (idx-1)*100+1`; its past-the-end page is an empty entity array
+    * (every full page of the real API is exactly 100 rows, so the
+    * position arithmetic is exact — SURVEY §2.1 S3/S4).
     */
   def feedPage(name: String, idx: Int): Option[String] = {
     val ps = pages(name)
@@ -150,7 +190,9 @@ object QboPageFeeds {
   * what ships to the executor, so strided partitions fetch
   * independently on a real cluster. `validate()` runs once at reader
   * creation for a loud misconfiguration error; `fetch(idx)` returns
-  * None past the feed's end (the stride-stop signal).
+  * None where the backend knows it is past the feed's end, and
+  * otherwise the page body unparsed — the reader's one parse of it
+  * stops the stride at an empty or absent entity array.
   */
 trait QboPageFetcher extends Serializable {
   def validate(): Unit = ()
@@ -180,9 +222,11 @@ final case class QboRegistryFetcher(feed: String) extends QboPageFetcher {
   * [[graft.qbo.QboOAuth2TokenSource]] from the config and issues the
   * paged entity query right there (`STARTPOSITION (idx-1)·100+1`,
   * SURVEY §2.1 S3); an empty/absent entity array marks past-the-end.
-  * Tokens refresh independently per executor — the QBO token endpoint
-  * serves concurrent refreshes, and each task's 401-retry path is the
-  * same [[graft.qbo.QboHttpApi.sendAuthed]] shell the driver uses.
+  * Tokens refresh independently per task — each task deserializes its
+  * own copy of this config and so builds its own client and token
+  * source; the QBO token endpoint serves concurrent refreshes, and
+  * each task's 401-retry path is the same
+  * [[graft.qbo.QboHttpApi.sendAuthed]] shell the driver uses.
   */
 final case class QboHttpFeedConfig(baseUrl: String, realm: String,
     entity: String, tokenUrl: String, clientId: String,
@@ -197,7 +241,6 @@ final case class QboHttpFeedConfig(baseUrl: String, realm: String,
   @transient private lazy val api = new graft.qbo.QboHttpApi(baseUrl, realm,
     new graft.qbo.QboOAuth2TokenSource(tokenUrl, clientId, clientSecret,
       refreshToken))
-  @transient private lazy val mapper = new ObjectMapper()
   // loud misconfiguration at READER CREATION (the trait contract —
   // review-r10 caught that only the registry fetcher honored it): a
   // malformed endpoint/credential config must fail the plan, not
@@ -214,27 +257,26 @@ final case class QboHttpFeedConfig(baseUrl: String, realm: String,
         throw new IllegalArgumentException(
           s"qbo http fetch config: $k must be an http(s) URL, got '$u'")
   }
-  override def fetch(idx: Int): Option[String] = {
-    val body = api.queryPage(entity,
-      (idx - 1) * graft.qbo.QboSource.PageSize + 1)
-    val arr = mapper.readTree(body).path("QueryResponse").path(entity)
-    if (arr.isArray && arr.size() > 0) Some(body) else None
-  }
+  override def fetch(idx: Int): Option[String] =
+    Some(api.queryPage(entity, (idx - 1) * QboSource.PageSize + 1))
 }
 
-class QboTable(schema: StructType, entity: String, feed: String,
-    fetchPartitions: Int, http: Option[QboHttpFeedConfig])
-    extends Table with SupportsRead {
+/** One entity's scan over the input partitions it was resolved to: a
+  * known page list (one [[QboPagePartition]] per page) or the strided
+  * fan-out of a [[QboPageFetcher]].
+  */
+class QboTable(schema: StructType, entity: String,
+    partitions: Seq[InputPartition]) extends Table with SupportsRead {
   override def name(): String = s"qbo/$entity"
   override def schema(): StructType = schema
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new QboScanBuilder(schema, entity, feed, fetchPartitions, http)
+    new QboScanBuilder(schema, entity, partitions)
 }
 
-class QboScanBuilder(fullSchema: StructType, entity: String, feed: String,
-    fetchPartitions: Int, http: Option[QboHttpFeedConfig])
+class QboScanBuilder(fullSchema: StructType, entity: String,
+    partitions: Seq[InputPartition])
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
 
@@ -264,62 +306,29 @@ class QboScanBuilder(fullSchema: StructType, entity: String, feed: String,
   override def pushedFilters(): Array[Filter] = pushed
 
   override def build(): Scan = new Scan with Batch {
-    // pushFilters runs BEFORE pruneColumns in V2ScanRelationPushDown,
-    // and a fully-pushed filter column may be pruned from the output —
-    // so the reader parses (pruned ∪ filtered) fields, evaluates the
-    // window, then projects down to readSchema. A live backend would
-    // instead put the window in the HTTP request and skip the local
-    // evaluation; the fixture backend must filter for real because
-    // Spark has already removed the accepted predicates from the plan.
-    private val parseSchema = StructType(fullSchema.fields.filter(f =>
-      prunedSchema.fieldNames.contains(f.name) ||
-        pushed.exists(QboDateWindow.references(_, f.name))))
+    // The reader parses every declared field, so drift anywhere on a
+    // page is loud whatever the query reads; it then evaluates the
+    // pushed window (whose column may be pruned from the output) and
+    // projects down to readSchema. A live backend would instead put the
+    // window in the HTTP request and skip the local evaluation; the
+    // fixture backend must filter for real because Spark has already
+    // removed the accepted predicates from the plan.
     override def readSchema(): StructType = prunedSchema
     override def toBatch: Batch = this
     override def description(): String = {
       val w = QboDateWindow.fromFilters(pushed)
       s"qbo/$entity${w.paramString}"
     }
-    /** Two page→partition strategies (VERDICT-r7 item 7):
-      *  - default (`fetchPartitions` ≤ 1, registry backend): the feed's
-      *    known page list, one page per partition — right when pages
-      *    are already local strings (fixtures) or the page count is
-      *    known;
-      *  - speculative fan-out (`fetchPartitions` = P > 1, or ANY http
-      *    backend — its page count is unknowable driver-side): P
-      *    strided partitions, each carrying a serialized
-      *    [[QboPageFetcher]]; partition k FETCHES pages k, k+P, k+2P, …
-      *    at read time inside its executor task and stops at the first
-      *    past-the-end page. No coordination, every page covered
-      *    exactly once, ≤ P wasted probe requests total — this is how
-      *    a live paginated API scales its ingest with executors
-      *    instead of the reference's one-page-at-a-time driver loop
-      *    (`qb_billpayments.py:66-79`).
-      */
-    override def planInputPartitions(): Array[InputPartition] =
-      if (fetchPartitions > 1 || http.isDefined) {
-        val p = fetchPartitions.max(1)
-        // structural config checks are location-independent — run them
-        // HERE so a malformed endpoint/credential set fails the PLAN,
-        // before any task launches (review-r10: executor-side
-        // createReader validation alone surfaces as task retries).
-        // The registry fetcher's validate stays executor-side only:
-        // its question — is the fixture registry populated in THIS
-        // JVM — is exactly per-JVM.
-        http.foreach(_.validate())
-        val fetcher: QboPageFetcher =
-          http.getOrElse(QboRegistryFetcher(feed))
-        (1 to p).map(k =>
-          QboStridePartition(entity, k, p, fetcher): InputPartition).toArray
-      } else
-        QboPageFeeds.pages(feed).toArray.map(p =>
-          QboPagePartition(entity, p): InputPartition)
+    override def planInputPartitions(): Array[InputPartition] = partitions.toArray
     override def createReaderFactory(): PartitionReaderFactory =
-      new QboReaderFactory(entity, parseSchema, prunedSchema, pushed)
+      new QboReaderFactory(entity, fullSchema, prunedSchema, pushed)
   }
 }
 
-case class QboPagePartition(entity: String, pageJson: String) extends InputPartition
+/** A page already held as a string (fixtures, registry feeds, the page
+  * list [[QboSource.fetchAll]] collected): serialized into the partition.
+  */
+case class QboPagePartition(pageJson: String) extends InputPartition
 
 /** Speculative fan-out partition: fetches pages `first, first+stride,
   * first+2·stride, …` until the feed reports past-the-end.
@@ -335,7 +344,7 @@ case class QboPagePartition(entity: String, pageJson: String) extends InputParti
   * descriptive error where the registry is absent instead of silently
   * scanning nothing (ADVICE-r8).
   */
-case class QboStridePartition(entity: String, first: Int, stride: Int,
+case class QboStridePartition(first: Int, stride: Int,
     fetcher: QboPageFetcher) extends InputPartition
 
 /** The `start_date`/`end_date` request window distilled from pushed
@@ -355,9 +364,6 @@ object QboDateWindow {
     case IsNotNull(DateCol) => true
     case _ => false
   }
-
-  def references(f: Filter, field: String): Boolean =
-    f.references.contains(field)
 
   /** Collapse accepted filters into the single inclusive [start, end]
     * window a live request would carry.
@@ -400,71 +406,61 @@ object QboDateWindow {
   }
 }
 
-class QboReaderFactory(entity: String, parseSchema: StructType,
+class QboReaderFactory(entity: String, schema: StructType,
     outSchema: StructType, pushed: Array[Filter])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    // page JSONs, LAZILY: the stride path must not fetch page k+stride
-    // before the elements of page k are consumed (a live backend's
-    // fetch happens right here, inside the executor task)
-    val pageIter: Iterator[String] = partition match {
-      case QboPagePartition(_, json) => Iterator.single(json)
-      case QboStridePartition(_, first, stride, fetcher) =>
+    // The one parse of a page: Catalyst's JSON parser over the declared
+    // envelope. Called bare — no FailureSafeParser, so no PERMISSIVE
+    // nulling — it throws on anything the declared schema cannot hold:
+    // FAILFAST, with the page named in the error.
+    val parser = new JacksonParser(QboSource.envelope(entity, schema),
+      new JSONOptions(Map.empty[String, String], "UTC", ""),
+      allowArrayAsStructs = false, Nil)
+    def entities(page: String): ArrayData = {
+      val envelope = try
+        parser.parse(page, CreateJacksonParser.string, UTF8String.fromString).headOption
+      catch {
+        case NonFatal(e) => throw new IllegalStateException(
+          s"QBO $entity page failed the declared-schema parse: ${page.take(200)}", e)
+      }
+      envelope.filterNot(_.isNullAt(0)).map(_.getStruct(0, 1))
+        .filterNot(_.isNullAt(0)).map(_.getArray(0))
+        .getOrElse(new GenericArrayData(Array.empty[Any]))
+    }
+    // entity arrays, LAZILY: the stride path must not fetch page
+    // k+stride before the elements of page k are consumed (a live
+    // backend's fetch happens right here, inside the executor task)
+    val arrays: Iterator[ArrayData] = partition match {
+      case QboPagePartition(json) => Iterator.single(entities(json))
+      case QboStridePartition(first, stride, fetcher) =>
         // fail FAST and descriptively on a misconfigured fetcher at
         // reader creation (ADVICE-r8) — e.g. the registry handle in a
         // JVM whose registry was never populated — never a silent
         // 0-row scan or a lazy mid-read throw
         fetcher.validate()
+        // an empty or absent entity array is past-the-end
         Iterator.iterate(first)(_ + stride)
           .map(fetcher.fetch)
-          .takeWhile(_.isDefined).map(_.get)
+          .takeWhile(_.isDefined).map(page => entities(page.get))
+          .takeWhile(_.numElements() > 0)
     }
+    val width = schema.length
+    val window = pushed.toSeq
+    val dateIdx = schema.fieldNames.indexOf(QboDateWindow.DateCol)
+    val rows = arrays.flatMap { a =>
+      Iterator.tabulate(a.numElements()) { i =>
+        // a null element reads as a row of nulls
+        if (a.isNullAt(i)) new GenericInternalRow(width) else a.getStruct(i, width)
+      }
+    }.filter(r => window.isEmpty || QboDateWindow.eval(window,
+      if (r.isNullAt(dateIdx)) null else r.getUTF8String(dateIdx).toString))
+    // the pruned output, as a view over each parsed row
+    val out = ProjectingInternalRow(outSchema,
+      outSchema.fieldNames.map(schema.fieldIndex).toIndexedSeq)
     new PartitionReader[InternalRow] {
-      // Catalyst's own JSON parser → from_json-identical semantics.
-      private val toStruct = JsonToStructs(parseSchema, Map.empty,
-        BoundReference(0, StringType, nullable = true)).withTimeZone("UTC")
-      private val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
-      private val dateIdx = parseSchema.fieldNames.indexOf(QboDateWindow.DateCol)
-      // parse-position of each output field (identity when no filter
-      // column was re-added beyond the pruned set)
-      private val outIdx = outSchema.fieldNames.map(n => parseSchema.fieldNames.indexOf(n))
-      private val identityProjection = outIdx.length == parseSchema.length &&
-        outIdx.zipWithIndex.forall { case (p0, i) => p0 == i }
-      private val mapper = new ObjectMapper()
-      private val iter: Iterator[String] = pageIter.flatMap { pageJson =>
-        val arr = mapper.readTree(pageJson).path("QueryResponse").path(entity)
-        if (arr.isArray) arr.elements().asScala.map(_.toString).toSeq
-        else Seq.empty[String]
-      }
-      private var current: InternalRow = _
-      override def next(): Boolean = {
-        while (iter.hasNext) {
-          row.update(0, UTF8String.fromString(iter.next()))
-          val parsed = toStruct.eval(row).asInstanceOf[InternalRow]
-          val pass = pushed.isEmpty || {
-            val v =
-              if (parsed == null || dateIdx < 0 || parsed.isNullAt(dateIdx)) null
-              else parsed.getUTF8String(dateIdx).toString
-            QboDateWindow.eval(pushed.toSeq, v)
-          }
-          if (pass) {
-            current =
-              if (identityProjection) parsed
-              else {
-                val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(outIdx.length)
-                var i = 0
-                while (i < outIdx.length) {
-                  out.update(i, parsed.get(outIdx(i), outSchema.fields(i).dataType))
-                  i += 1
-                }
-                out
-              }
-            return true
-          }
-        }
-        false
-      }
-      override def get(): InternalRow = current
+      override def next(): Boolean = rows.hasNext && { out.project(rows.next()); true }
+      override def get(): InternalRow = out
       override def close(): Unit = ()
     }
   }

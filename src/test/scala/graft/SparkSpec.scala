@@ -25,8 +25,7 @@ object TaskFailureMonitor
     "not registered in this JVM", // QboDataSourceSpec fail-fast case
     "graft_gram_matrix: expected", // GramMatrixSpec arity intercepts
     "graft.functions.GramMatrixAgg", // GramMatrixSpec overflow intercept
-    "failed the declared-schema parse", // QboSourceSpec strict-parse cases
-    "Unexpected end-of-input") // QboSourceSpec truncated-JSON case
+    "failed the declared-schema parse") // QboSourceSpec strict-parse cases
   override def onTaskEnd(
       e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
     e.reason match {

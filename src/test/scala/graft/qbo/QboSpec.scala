@@ -19,6 +19,10 @@ class QboSourceSpec extends SparkSpec {
     }
   }
 
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(e => Option(e.getMessage).getOrElse("")).mkString(" | ")
+
   test("fetchAll paginates to exhaustion with len-based predicate (S3/S4)") {
     val api = new FakeApi(207)
     val df = QboSource.fetchAll(api, "Deposit", Schemas.deposit, spark)
@@ -67,10 +71,7 @@ class QboSourceSpec extends SparkSpec {
 
   test("schema drift: malformed page fails LOUDLY, never as a silently " +
     "empty page") {
-    def messages(t: Throwable): String =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-        .map(e => Option(e.getMessage).getOrElse("")).mkString(" | ")
-    // invalid JSON: without the guard PERMISSIVE parses this to a null
+    // invalid JSON: a PERMISSIVE parse would read this as a null
     // envelope → zero rows → an invisible partial load
     val invalid = """{"QueryResponse": {"Bill": [{"Id": "1"]}}"""
     val e1 = intercept[Throwable] {
@@ -100,11 +101,21 @@ class QboSourceSpec extends SparkSpec {
     assert(df.count() == 2)
     assert(!df.columns.contains("futureField"))
     assert(df.filter(col("Id") === "8").select("TxnDate").head.isNullAt(0))
-    QboPageFeeds.register("drift_bad", Seq("""{"QueryResponse": {"Bill":"""))
-    intercept[Throwable] {
-      spark.read.format("qbo")
-        .option("entity", "Bill").option("feed", "drift_bad").load().count()
-    }
+    // truncated JSON, then a type-drifted element next to a good one: a
+    // drifted field fails its page, never reads back as null
+    Seq("""{"QueryResponse": {"Bill":""",
+      """{"QueryResponse": {"Bill": [{"Id": "1", "Balance": 2.0},
+        {"Id": "2", "Balance": "abc"}]}}""",
+      """{"QueryResponse": {"Bill": [{"Id": "1", "Balance": 2.0},
+        {"Id": "2", "Balance": {"amount": 5.0}}]}}""").zipWithIndex
+      .foreach { case (page, i) =>
+        QboPageFeeds.register(s"drift_bad_$i", Seq(page))
+        val e = intercept[Throwable] {
+          spark.read.format("qbo").option("entity", "Bill")
+            .option("feed", s"drift_bad_$i").load().select("Id", "Balance").collect()
+        }
+        assert(messages(e).contains("declared-schema parse"), messages(e))
+      }
   }
 }
 

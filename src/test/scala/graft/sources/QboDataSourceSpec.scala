@@ -51,19 +51,24 @@ class QboDataSourceSpec extends SparkSpec {
     }
 
   test("TxnDate range pushes into the source; no post-scan Filter remains") {
-    // fixture bills: TxnDate 2024-03-05, 2024-03-06, 2024-03-09
-    val df = spark.read.format("qbo")
-      .option("entity", "Bill").option("feed", "bills").load()
-      .filter(col("TxnDate") >= "2024-03-06" && col("TxnDate") < "2024-03-09")
-    val rows = df.select("Id").orderBy("Id").collect().map(_.getString(0))
-    assert(rows.toSeq == Seq("146"))
-    // the accepted predicates must be GONE from the Spark plan (the
-    // source is trusted to apply them — the server-side-params model)
-    assert(filterNodes(df).isEmpty, df.queryExecution.executedPlan.toString)
-    // and the scan advertises the window it would send as request params
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("start_date=2024-03-06"), plan)
-    assert(plan.contains("end_date="), plan)
+    import graft.qbo.{Fixtures, QboSource, Schemas}
+    // fixture bills: TxnDate 2024-03-05, 2024-03-06, 2024-03-09; the
+    // same scan serves format("qbo") and QboSource.entityFrame
+    for (bills <- Seq(
+        spark.read.format("qbo").option("entity", "Bill").option("feed", "bills").load(),
+        QboSource.entityFrame(spark, "Bill", Fixtures.billPages, Schemas.bill))) {
+      val df = bills
+        .filter(col("TxnDate") >= "2024-03-06" && col("TxnDate") < "2024-03-09")
+      val rows = df.select("Id").orderBy("Id").collect().map(_.getString(0))
+      assert(rows.toSeq == Seq("146"))
+      // the accepted predicates must be GONE from the Spark plan (the
+      // source is trusted to apply them — the server-side-params model)
+      assert(filterNodes(df).isEmpty, df.queryExecution.executedPlan.toString)
+      // and the scan advertises the window it would send as request params
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("start_date=2024-03-06"), plan)
+      assert(plan.contains("end_date="), plan)
+    }
   }
 
   test("pushed filter on a pruned-out column still applies") {
@@ -193,6 +198,7 @@ class QboDataSourceSpec extends SparkSpec {
       ex.close()
     }
     val tokenPosts = new java.util.concurrent.atomic.AtomicInteger(0)
+    val queries = new java.util.concurrent.atomic.AtomicInteger(0)
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/oauth/token", (ex: HttpExchange) => {
       tokenPosts.incrementAndGet()
@@ -204,6 +210,7 @@ class QboDataSourceSpec extends SparkSpec {
       if (auth != "Bearer fresh-token")
         respond(ex, 401, """{"fault":"AuthenticationFault"}""")
       else {
+        queries.incrementAndGet()
         val sp = "STARTPOSITION (\\d+)".r
           .findFirstMatchIn(body).get.group(1).toInt
         // 4 rows over three pages; STARTPOSITION 301+ is past-the-end
@@ -237,9 +244,14 @@ class QboDataSourceSpec extends SparkSpec {
         .option("fetchPartitions", "2")
         .load()
       assert(df.rdd.getNumPartitions == 2)
-      val got = df.select("Id", "TotalAmt").orderBy("Id")
-        .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+      // sorted locally: a Spark orderBy samples the scan in a job of
+      // its own, which would fetch every page twice
+      val got = df.select("Id", "TotalAmt")
+        .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq.sorted
       assert(got == Seq(("1", 1.0), ("2", 2.0), ("3", 3.0), ("4", 4.0)))
+      // the 3 pages plus one past-the-end probe per strided partition:
+      // the reader's one parse of each body is also the stop test
+      assert(queries.get() == 5, s"authorized query requests ${queries.get()}")
       // both strided tasks fetched independently: each built its own
       // token source and exchanged the refresh token itself
       assert(tokenPosts.get() >= 1)
