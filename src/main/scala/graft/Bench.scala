@@ -103,11 +103,11 @@ import org.apache.spark.sql.SparkSession
   * Layers: one [[Meter]] rides the session and every timed execution
   * is one meter window, so the artifact's "layers" section holds, per
   * query, what the engine reported for its last clean rep (the last
-  * rep when none is clean): jobs, stages, tasks, executor run and CPU
-  * time, GC, shuffle bytes written and read, spill, peak execution
-  * memory, plan build time, the Exchange nodes and interpreted lambdas
-  * of the executed plans, and the micro-batches of streaming drains.
-  * Resumed queries carry no record.
+  * rep when none is clean): jobs, stages, tasks, scan tasks, executor
+  * run and CPU time, GC, shuffle bytes written and read, spill, peak
+  * execution memory, plan build time, classes compiled, the Exchange
+  * nodes and interpreted lambdas of the executed plans, and the
+  * micro-batches of streaming drains. Resumed queries carry no record.
   */
 object Bench {
 
@@ -115,6 +115,14 @@ object Bench {
     * fired, and what [[Meter]] saw in its window.
     */
   final case class Reading(secs: Double, stalled: Boolean, layers: Layers)
+
+  /** The input dir every bench tool reads: `SPARK_GRAFT_SF_DIR`. */
+  def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** `local[n]` width of every bench tool's session: `SPARK_GRAFT_CPUS`.
+    * The recorded boards set 32 explicitly.
+    */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
   /** One untimed warm-up, then up to `n` timed reps of query `name`
     * under the stall guard, each in its own meter window. The reps stop
@@ -142,8 +150,7 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = Bench.sfDir
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt.max(1)
     val fullOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
       "/root/repo/BENCH_full.json")

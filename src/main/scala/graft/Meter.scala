@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.GraftBus
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
@@ -14,28 +15,31 @@ import org.apache.spark.sql.util.QueryExecutionListener
 /** What the engine reported inside one [[Meter]] window: scheduler and
   * task counts, the plan build time and plan facts of every query
   * execution that finished, and the micro-batches of streaming drains.
+  * `scanTasks` counts the tasks of the stages that read files: the scan
+  * parallelism the input's file and row-group layout allowed.
+  * `compiles` counts the classes Janino compiled in the window,
+  * JVM-wide (planning and local executors alike).
   */
 final case class Layers(
-    jobs: Long = 0L, stages: Long = 0L, tasks: Long = 0L,
+    jobs: Long = 0L, stages: Long = 0L, tasks: Long = 0L, scanTasks: Long = 0L,
     executorRunMs: Long = 0L, executorCpuNs: Long = 0L, gcMs: Long = 0L,
-    shuffleWriteBytes: Long = 0L, shuffleWriteRecords: Long = 0L,
-    shuffleReadBytes: Long = 0L, spillBytes: Long = 0L,
-    peakExecMemBytes: Long = 0L, planMs: Long = 0L, exchanges: Long = 0L,
+    shuffleWriteBytes: Long = 0L, shuffleReadBytes: Long = 0L, spillBytes: Long = 0L,
+    peakExecMemBytes: Long = 0L, planMs: Long = 0L, compiles: Long = 0L, exchanges: Long = 0L,
     interpretedLambdas: Long = 0L, batches: Long = 0L, batchMs: Long = 0L) {
 
-  /** The `layers` record of `BENCH_full.json`: name → JSON number.
-    * Shuffle records are not part of it; only `ScaleProbe` prints them.
-    */
+  /** The `layers` record of `BENCH_full.json`: name → JSON number. */
   def attrs: Seq[(String, String)] = {
     def secs(x: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
     Seq("jobs" -> jobs.toString, "stages" -> stages.toString,
-      "tasks" -> tasks.toString, "executor_run_s" -> secs(executorRunMs / 1e3),
+      "tasks" -> tasks.toString, "scan_tasks" -> scanTasks.toString,
+      "executor_run_s" -> secs(executorRunMs / 1e3),
       "executor_cpu_s" -> secs(executorCpuNs / 1e9), "gc_s" -> secs(gcMs / 1e3),
       "shuffle_write_bytes" -> shuffleWriteBytes.toString,
       "shuffle_read_bytes" -> shuffleReadBytes.toString,
       "spill_bytes" -> spillBytes.toString,
       "peak_exec_mem_bytes" -> peakExecMemBytes.toString,
-      "plan_s" -> secs(planMs / 1e3), "exchanges" -> exchanges.toString,
+      "plan_s" -> secs(planMs / 1e3), "compiles" -> compiles.toString,
+      "exchanges" -> exchanges.toString,
       "interpreted_lambdas" -> interpretedLambdas.toString,
       "batches" -> batches.toString, "batch_ms" -> batchMs.toString)
   }
@@ -55,6 +59,10 @@ final class Meter(spark: SparkSession) extends SparkListener
   private var window = Layers()
   private def add(f: Layers => Layers): Unit = synchronized { window = f(window) }
 
+  private def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  /** The JVM's compile count when the window began; None while detached. */
+  private var compiledAtStart: Option[Long] = None
+
   private val streams = new StreamingQueryListener {
     import StreamingQueryListener._
     def onQueryStarted(e: QueryStartedEvent): Unit = ()
@@ -65,6 +73,7 @@ final class Meter(spark: SparkSession) extends SparkListener
   }
 
   def attach(): this.type = {
+    synchronized { compiledAtStart = Some(compiled) }
     spark.sparkContext.addSparkListener(this)
     spark.listenerManager.register(this)
     spark.streams.addListener(streams)
@@ -72,6 +81,7 @@ final class Meter(spark: SparkSession) extends SparkListener
   }
 
   def detach(): Unit = {
+    synchronized { compiledAtStart = None }
     GraftBus.drain(spark.sparkContext)
     spark.sparkContext.removeSparkListener(this)
     spark.listenerManager.unregister(this)
@@ -81,14 +91,23 @@ final class Meter(spark: SparkSession) extends SparkListener
   /** Drains the bus, then returns and resets the current window. */
   def take(): Layers = {
     GraftBus.drain(spark.sparkContext)
-    synchronized { val l = window; window = Layers(); l }
+    synchronized {
+      val now = compiled
+      val l = window.copy(compiles = compiledAtStart.fold(0L)(now - _))
+      window = Layers()
+      compiledAtStart = compiledAtStart.map(_ => now)
+      l
+    }
   }
 
   override def onJobStart(e: SparkListenerJobStart): Unit =
     add(l => l.copy(jobs = l.jobs + 1))
 
-  override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-    add(l => l.copy(stages = l.stages + 1))
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+    val info = e.stageInfo
+    val scan = if (info.rddInfos.exists(_.name == "FileScanRDD")) info.numTasks else 0
+    add(l => l.copy(stages = l.stages + 1, scanTasks = l.scanTasks + scan))
+  }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
     val m = e.taskMetrics
@@ -98,7 +117,6 @@ final class Meter(spark: SparkSession) extends SparkListener
       executorCpuNs = l.executorCpuNs + m.executorCpuTime,
       gcMs = l.gcMs + m.jvmGCTime,
       shuffleWriteBytes = l.shuffleWriteBytes + m.shuffleWriteMetrics.bytesWritten,
-      shuffleWriteRecords = l.shuffleWriteRecords + m.shuffleWriteMetrics.recordsWritten,
       shuffleReadBytes = l.shuffleReadBytes + m.shuffleReadMetrics.totalBytesRead,
       spillBytes = l.spillBytes + m.memoryBytesSpilled + m.diskBytesSpilled,
       peakExecMemBytes = math.max(l.peakExecMemBytes, m.peakExecutionMemory)))

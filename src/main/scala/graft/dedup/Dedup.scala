@@ -533,10 +533,9 @@ object Dedup {
   }
 
   /** The Ed-Join candidate stage alone ((a_id, b_id) before the banded
-    * verify) — exposed for the scale probes so candidate mass is
-    * measured on EXACTLY the production gate, not a probe-local copy.
+    * verify).
     */
-  private[graft] def editDistanceCandidates(strs: DataFrame, q: Int,
+  private def editDistanceCandidates(strs: DataFrame, q: Int,
       dMax: Int): DataFrame = {
     val prefLen = q * dMax + 1
     val lMin = q * (dMax + 1) + dMax // below this the q-gram bound is vacuous
@@ -662,7 +661,7 @@ object Dedup {
     * (the sh-isNotNull filter below mirrors the constraint the explode
     * branch infers on its own, for the same reason)
     */
-  private[graft] def setSimilaritySized(df: DataFrame, idCol: String,
+  private def setSimilaritySized(df: DataFrame, idCol: String,
       textCol: String): DataFrame =
     df.filter(col(idCol).isNotNull)
       .select(col(idCol).as("id"), graft.functions.GraftFunctions
@@ -673,10 +672,9 @@ object Dedup {
       .filter(col("sz") > 0)
 
   /** The PPJoin candidate stage alone ((a_id, b_id) before the exact
-    * Jaccard verify) — exposed for the scale probes, same rationale as
-    * [[editDistanceCandidates]].
+    * Jaccard verify).
     */
-  private[graft] def setSimilarityCandidates(sized: DataFrame, tNum: Int,
+  private def setSimilarityCandidates(sized: DataFrame, tNum: Int,
       tDen: Int): DataFrame = {
     // Long element keys (r17, VERDICT-r16 item 5): every exchange and
     // sort below runs on k = xxhash64(e) — 8 fixed bytes — instead of

@@ -599,7 +599,7 @@ object ExprHelpers {
     * words (Java regex `\\s+` split, limit -1) → per-word hash32 →
     * boundaries where the 4-word Karp-Rabin polynomial ≡ 0 (mod 8) →
     * md5 hex digest of each space-joined chunk. Bit-identical to the
-    * HOF chain in `Curation4.cdcChunkFrame` (boundaries at 1-based
+    * HOF chain q202 ran before it (boundaries at 1-based
     * positions i ≥ 4 with (g[i-3]·29791 + g[i-2]·961 + g[i-1]·31 +
     * g[i]) % 8 == 0 over 1-based g; chunk k spans ss(k)..es(k); empty
     * spans skipped). Returns the digests in chunk order, duplicates

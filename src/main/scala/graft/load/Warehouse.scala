@@ -7,14 +7,21 @@ import org.apache.spark.sql.functions._
   *
   * The reference's temp-table dance (`CREATE temp` → `COPY` → `TRUNCATE`
   * → `INSERT SELECT` → `DROP`) is a Redshift-COPY artifact; in Spark the
-  * staged parquet is directly readable, so a full refresh is one atomic
-  * `saveAsTable(Overwrite)` — no window of emptiness between TRUNCATE
-  * and INSERT (SURVEY §4), no leaked temp table (qb_purchases.py never
-  * drops its temp, §0.1).
+  * staged parquet is directly readable, so a full refresh is one
+  * `saveAsTable(Overwrite)` and no temp table is left behind
+  * (qb_purchases.py never drops its temp, §0.1). That overwrite is NOT
+  * atomic: Spark drops the existing table before the write job runs, so
+  * readers see no table while it runs, and a write that fails leaves no
+  * table at all — the same window of emptiness as the reference's
+  * TRUNCATE → INSERT (SURVEY §4). ROADMAP item 1 carries the fix and
+  * its failing spec.
   */
 object Warehouse {
 
-  /** W4: full-refresh load (TRUNCATE + reload ≡ atomic overwrite). */
+  /** W4: full-refresh load (TRUNCATE + reload ≡ overwrite). Not atomic:
+    * the old table is dropped before the new contents are written, and
+    * a failed write loses it (see the object doc; ROADMAP item 1).
+    */
   def fullRefresh(df: DataFrame, table: String): Unit =
     df.write.mode("overwrite").format("parquet").saveAsTable(table)
 

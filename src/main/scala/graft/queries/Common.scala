@@ -175,9 +175,21 @@ object Common {
       else sys.props("java.io.tmpdir")
     }
 
+  /** Entries of Spark's JVM-wide generated-class cache in the sessions
+    * the repo builds (Spark's default is 100). Spark 4 keys that cache
+    * on the class loader plus the source, so in local mode each
+    * whole-stage class is compiled twice, once where the plan is built
+    * and once under the executor's loader, and one multi-stage query
+    * fills 100 entries: a run of many queries kept evicting and
+    * recompiling. At 1,000 the second run of a batch query compiles
+    * nothing (streaming drains still compile each run).
+    */
+  val CodegenCacheEntries = "1000"
+
   /** The session the repo's own mains run on: `local[cpus]` with `cpus`
     * shuffle partitions, UTC, the graft extensions (so benched and
-    * verified plans are the shipped plans), no UI and WARN logs.
+    * verified plans are the shipped plans), no UI, WARN logs and a
+    * [[CodegenCacheEntries]]-entry codegen cache.
     * Shuffle and spill files ride [[scratchRoot]] like the streaming
     * checkpoints — a throttled local volume must not masquerade as
     * engine cost. `extra` confs are set on top.
@@ -190,6 +202,7 @@ object Common {
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.local.dir", scratchRoot + "/graft_spark_local")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
     val spark = extra.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

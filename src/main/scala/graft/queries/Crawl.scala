@@ -77,8 +77,8 @@ object Crawl {
       .toDF("host", "url", "delay_s")
   }
 
-  /** Shared builder (probe discipline — the ScaleProbe r18 row calls
-    * THIS, not a re-derivation): the q216 frontier pipeline over any
+  /** Shared builder (q216 and CrawlSpec call THIS, not a
+    * re-derivation): the q216 frontier pipeline over any
     * frame with a `doc_id` column — synthesize messy URLs + a
     * /private/ probe per doc, canonicalize (T120), gate through the
     * per-HOST robots dimension (T121; parse once per host, verdict by
@@ -145,39 +145,6 @@ object Crawl {
         (expr(s"(n_urls - 1 + ${k - 1}) div $k") * col("delay_s"))
           .as("makespan_s"),
         col("order_md5"))
-  }
-
-  /** Shared builder (probe discipline): the q225 source-pair overlap
-    * matrix over any (source, text) frame — distinct trigram-shingle
-    * hashes per source, exact intersection/union/Jaccard-ppm per
-    * source pair. The localCheckpoint'd distinct frame feeds the
-    * counts AND both self-join sides.
-    */
-  def sourceOverlap(s: SparkSession, docs: DataFrame): DataFrame = {
-    val ex = docs
-      .select(col("source"), split(col("text"), "\\s+").as("ws"))
-      .filter(size(col("ws")) >= 3)
-      .select(col("source"), explode(expr(
-        "array_distinct(transform(sequence(1, size(ws)-2), " +
-          "i -> concat_ws(' ', slice(ws, i, 3))))")).as("sh"))
-      .select(col("source"), Common.hash32(col("sh")).as("h"))
-      .distinct()
-      .localCheckpoint() // counts + both self-join sides
-    val counts = ex.groupBy("source").agg(count(lit(1)).as("n"))
-    ex.as("a")
-      .join(ex.as("b"), col("a.h") === col("b.h") &&
-        col("a.source") < col("b.source"))
-      .select(col("a.source").as("s1"), col("b.source").as("s2"))
-      .groupBy("s1", "s2")
-      .agg(count(lit(1)).as("inter"))
-      .join(counts.select(col("source").as("s1"), col("n").as("n1")),
-        "s1")
-      .join(counts.select(col("source").as("s2"), col("n").as("n2")),
-        "s2")
-      .select(col("s1"), col("s2"), col("inter"),
-        (col("n1") + col("n2") - col("inter")).as("uni"),
-        expr("(1000000 * inter) DIV (n1 + n2 - inter)")
-          .as("jaccard_ppm"))
   }
 
   /** Shared builder (q220/q230): the host link-graph extraction — per
@@ -270,10 +237,10 @@ object Crawl {
     ranks.select(col("h").as("host"), col("pr"))
   }
 
-  /** Shared builder (q237/q246/ScaleProbe r20 — review-r12: three
-    * hand-synced copies of this scale-sensitive block, only one
-    * plan-gated): largest-remainder apportionment of `units` across
-    * the (host, pr) frame — floor shares by exact integer
+  /** Shared builder (q237/q246; this scale-sensitive block once had
+    * three hand-synced copies, only one plan-gated):
+    * largest-remainder apportionment of `units` across the (host, pr)
+    * frame — floor shares by exact integer
     * cross-multiplication, the leftover +1 each to the largest
     * remainders (rem desc, host asc tiebreak — the host STRING in
     * both engines, review-r11). The remainder rank is an inclusive
@@ -1427,8 +1394,35 @@ object Crawl {
         FROM i JOIN c c1 ON c1.source = i.s1
           JOIN c c2 ON c2.source = i.s2
         ORDER BY s1, s2"""),
-      (s, d) =>
-        sourceOverlap(s, table(s, d, "documents")).orderBy("s1", "s2")),
+      (s, d) => {
+        // distinct trigram-shingle hashes per source, exact
+        // intersection/union/Jaccard-ppm per source pair
+        val ex = table(s, d, "documents")
+          .select(col("source"), split(col("text"), "\\s+").as("ws"))
+          .filter(size(col("ws")) >= 3)
+          .select(col("source"), explode(expr(
+            "array_distinct(transform(sequence(1, size(ws)-2), " +
+              "i -> concat_ws(' ', slice(ws, i, 3))))")).as("sh"))
+          .select(col("source"), Common.hash32(col("sh")).as("h"))
+          .distinct()
+          .localCheckpoint() // counts + both self-join sides
+        val counts = ex.groupBy("source").agg(count(lit(1)).as("n"))
+        ex.as("a")
+          .join(ex.as("b"), col("a.h") === col("b.h") &&
+            col("a.source") < col("b.source"))
+          .select(col("a.source").as("s1"), col("b.source").as("s2"))
+          .groupBy("s1", "s2")
+          .agg(count(lit(1)).as("inter"))
+          .join(counts.select(col("source").as("s1"), col("n").as("n1")),
+            "s1")
+          .join(counts.select(col("source").as("s2"), col("n").as("n2")),
+            "s2")
+          .select(col("s1"), col("s2"), col("inter"),
+            (col("n1") + col("n2") - col("inter")).as("uni"),
+            expr("(1000000 * inter) DIV (n1 + n2 - inter)")
+              .as("jaccard_ppm"))
+          .orderBy("s1", "s2")
+      }),
 
     Q("q226_archive_to_content",
       "the SEVEN-layer crawl capstone (T135 — every archive-ingest " +

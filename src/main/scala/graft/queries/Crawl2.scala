@@ -53,10 +53,8 @@ object Crawl2 {
     * canonical-link shape (incl. the comment/rawtext/second-canonical
     * decoys), runs the REAL scanner + resolver, and returns
     * (doc_id, own canonical URL, resolved canonical key, is_self).
-    * Shared with the r22 scale probe so the measured plan runs this
-    * exact code, not a hand-synced copy.
     */
-  private[graft] def canonicalRow(id: Long)
+  private def canonicalRow(id: Long)
       : (Long, String, String, Long) = {
     import graft.multimodal.Html
     import graft.text.Urls
@@ -102,9 +100,9 @@ object Crawl2 {
     * variant's hreflang block (incl. the planted reciprocity and
     * fingerprint defects), runs the real scanner, and returns
     * (cluster key, lang, own URL, resolved "lang>url" alternates,
-    * digit fingerprint). Shared with the r22 scale probe.
+    * digit fingerprint).
     */
-  private[graft] def hreflangRow(id: Long)
+  private def hreflangRow(id: Long)
       : (String, String, String, Seq[String], String) = {
     import graft.multimodal.Html
     import graft.text.Urls
@@ -153,7 +151,7 @@ object Crawl2 {
     * n_fp_reject, n_aligned). Bounded state — a cluster is one
     * site's language variants (≤3 here, ≤ tens in production).
     */
-  private[graft] def hreflangVerdict(ckey: String,
+  private def hreflangVerdict(ckey: String,
       ms0: Seq[(String, String, Seq[String], String)])
       : (String, Long, String, Long, Long, Long, Long) = {
     val ms = ms0.sortBy(_._1)

@@ -18,36 +18,9 @@ object Curation4 {
 
   import Common.{sqlWords, sqlHash32}
 
-  /** (doc_id, h) — each doc's DISTINCT trigram-shingle hashes, one row
-    * per hash (q196's input; the r16 probe measures the same frame).
-    */
-  def noveltyExplode(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    // one-pass hash32+distinct expression (r17): identical elements
-    // and first-occurrence order as array_distinct(transform(..));
-    // the HOF form ran one interpreted md5 lambda per shingle
-    Dedup.shingleFrame(docs, "doc_id", "text")
-      .select(col("doc_id"), explode(graft.functions.Hash32Arr
-        .distinct(docs.sparkSession, col("sh"))).as("h"))
-
-  /** (doc_id, dg) — CDC chunk digests under the 4-word Karp-Rabin
-    * mod-8 boundary rule (q202's chunker; the r16 probe measures the
-    * same frame — one definition, no probe drift).
-    */
-  def cdcChunkFrame(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    // one imperative pass per doc (CdcChunksExpr, r17): same `\s+`
-    // split, same per-word hash32, same 4-word Karp-Rabin mod-8
-    // boundary rule, same per-chunk space-joined md5 digests as the
-    // HOF chain it replaces (which ran ~3·len interpreted lambdas +
-    // one md5 per word per doc); Curation4Spec's independent
-    // plain-Scala CDC referee and the DuckDB twin pin the equivalence
-    docs.select(col("doc_id"), explode(graft.functions.CdcChunks(
-      docs.sparkSession, col("text"))).as("dg"))
-
   /** (doc_id, v) — UNCAPPED winnowing fingerprints: positional trigram
     * hashes, sliding windows of 4, per-window minimum (q203's
-    * fingerprint pass; the r16 probe measures the same frame).
+    * fingerprint pass).
     */
   def winnowExplode(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
@@ -63,15 +36,17 @@ object Curation4 {
       explode(graft.functions.WinnowFp(docs.sparkSession,
         col("text"))).as("v"))
 
-  /** q205's routing decision over a fingerprint explode frame: the df
-    * HISTOGRAM (one token-keyed aggregation, then a count-of-counts
-    * over it — bounded by the number of distinct df values) feeds a
+  /** q205's routing decision over an already-built fingerprint df
+    * frame (v, c) — q205 materializes that frame ONCE and
+    * feeds both this and the hot-fingerprint filter (the df aggregation
+    * is the dominant cost at stress scale; an earlier shape paid it
+    * twice). The df HISTOGRAM (a count-of-counts
+    * over (v, c), bounded by the number of distinct df values) feeds a
     * single-partition cumulative window that derives, in ONE 1-row
     * read, the capped pair mass Σ_{df≤τ} df², the q194 τ-budget
     * τ·|fp|, and — when the mass is over budget — the TIGHTENED cap
     * τ* = max{c : Σ_{df≤c} df² ≤ τ·|fp|} (floor 1). Returns
-    * (tier, effective cap, n_fp, capped_mass, τ). Shared by the query
-    * and the r17 probe — one definition, no probe drift.
+    * (tier, effective cap, n_fp, capped_mass, τ).
     *
     * Why tighten instead of switching to the positional containment
     * tier (the r16 prose rule): the r17 probe MEASURED that rule and
@@ -85,17 +60,6 @@ object Curation4 {
     * the df shape — and it is MOSS-faithful (the winnowing paper's own
     * system drops fingerprints shared by more than N documents as
     * template/boilerplate evidence).
-    */
-  def winnowRouteStats(ex: org.apache.spark.sql.DataFrame,
-      tau: org.apache.spark.sql.DataFrame)
-      : (String, Long, Long, Long, Long) =
-    statsFromDf(ex.groupBy("v").agg(count(lit(1)).as("c")), tau)
-
-  /** The routing rule over an already-built fingerprint df frame
-    * (v, c) — [[winnowAuto]] materializes that frame ONCE and feeds
-    * both this and the hot-fingerprint filter (the df aggregation is
-    * the dominant cost at stress scale; review-r10 caught the shipped
-    * shape paying it twice).
     */
   private def statsFromDf(dfc: org.apache.spark.sql.DataFrame,
       tau: org.apache.spark.sql.DataFrame)
@@ -122,40 +86,6 @@ object Curation4 {
       (st.getLong(0), st.getLong(1), st.getLong(2), st.getLong(3))
     if (capped <= t * nFp) ("winnow", t, nFp, capped, t)
     else ("tightened", ts, nFp, capped, t)
-  }
-
-  /** q205's routed plan: q203's capped winnowing pairs, with the cap
-    * self-tuned to the measured df histogram — τ (the q203 cap) when
-    * the capped mass fits the q194 budget, the tightened τ* when a
-    * hub-shaped corpus would blow past it. Output schema
-    * (tier, a_id, b_id, n_shared); under budget the rows are q203's
-    * exactly. The 1-row stats read is a driver-side plan decision on
-    * an aggregate (the AQE-replanning class, never a data collect).
-    */
-  def winnowAuto(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val tau = docs.agg(
-      expr("greatest(CAST(4 AS BIGINT), count(1) DIV 250) AS t"))
-    // one explode materialization feeds the df aggregation and both
-    // self-join sides; one df materialization (|distinct fp| rows)
-    // feeds the histogram stats AND the hot filter — the df
-    // aggregation over the exploded frame is the dominant cost at
-    // stress scale and is paid exactly once
-    val ex = winnowExplode(docs).localCheckpoint()
-    val dfc = ex.groupBy("v").agg(count(lit(1)).as("c")).localCheckpoint()
-    val (tier, eff, _, _, _) = statsFromDf(dfc, tau)
-    val hot = dfc.filter(col("c") > lit(eff)).select("v")
-    val exc = ex.join(hot, Seq("v"), "left_anti")
-      .select(col("doc_id"), col("v"))
-    exc.select(col("doc_id").as("a_id"), col("v"))
-      .join(exc.select(col("doc_id").as("b_id"), col("v")), "v")
-      .filter(col("a_id") < col("b_id"))
-      .groupBy("a_id", "b_id")
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= 3)
-      .select(lit(tier).as("tier"), col("a_id"), col("b_id"),
-        col("n_shared"))
-      .orderBy("a_id", "b_id")
   }
 
   /** Real-delimiter line segmentation (T113's production path): one
@@ -241,7 +171,14 @@ object Curation4 {
         FROM ex JOIN mn USING (h)
         GROUP BY ex.doc_id ORDER BY ex.doc_id"""),
       (s, d) => {
-        val ex = noveltyExplode(table(s, d, "documents"))
+        // (doc_id, h): each doc's DISTINCT trigram-shingle hashes, one
+        // row per hash. One-pass hash32+distinct expression (r17):
+        // identical elements and first-occurrence order as
+        // array_distinct(transform(..)); the HOF form ran one
+        // interpreted md5 lambda per shingle.
+        val ex = Dedup.shingleFrame(table(s, d, "documents"), "doc_id", "text")
+          .select(col("doc_id"), explode(graft.functions.Hash32Arr
+            .distinct(s, col("sh"))).as("h"))
           .localCheckpoint() // feeds the min-agg AND the join back
         val mn = ex.groupBy("h").agg(min(col("doc_id")).as("m"))
         ex.join(mn, "h")
@@ -514,7 +451,17 @@ object Curation4 {
         FROM chn JOIN mn USING (dg)
         GROUP BY chn.doc_id ORDER BY chn.doc_id"""),
       (s, d) => {
-        val chunks = cdcChunkFrame(table(s, d, "documents"))
+        // (doc_id, dg): CDC chunk digests under the 4-word Karp-Rabin
+        // mod-8 boundary rule, in one imperative pass per doc
+        // (CdcChunksExpr, r17): same `\s+` split, same per-word hash32,
+        // same boundary rule, same per-chunk space-joined md5 digests
+        // as the HOF chain it replaces (which ran ~3·len interpreted
+        // lambdas + one md5 per word per doc); Curation4Spec's
+        // independent plain-Scala CDC referee and the DuckDB twin pin
+        // the equivalence.
+        val chunks = table(s, d, "documents")
+          .select(col("doc_id"), explode(graft.functions.CdcChunks(
+            s, col("text"))).as("dg"))
           .localCheckpoint() // feeds the min-agg AND the join back
         val mn = chunks.groupBy("dg").agg(min(col("doc_id")).as("m"))
         chunks.join(mn, "dg")
@@ -651,7 +598,37 @@ object Curation4 {
           GROUP BY a.doc_id, b.doc_id)
         SELECT tier, a_id, b_id, n_shared FROM pairs CROSS JOIN ch
         WHERE n_shared >= 3 ORDER BY a_id, b_id"""),
-      (s, d) => winnowAuto(table(s, d, "documents"))),
+      (s, d) => {
+        // q203's capped winnowing pairs, with the cap self-tuned to the
+        // measured df histogram — τ (the q203 cap) when the capped mass
+        // fits the q194 budget, the tightened τ* when a hub-shaped corpus
+        // would blow past it; under budget the rows are q203's exactly.
+        // The 1-row stats read is a plan decision on an aggregate (the
+        // AQE-replanning class, never a data collect).
+        val docs = table(s, d, "documents")
+        val tau = docs.agg(
+          expr("greatest(CAST(4 AS BIGINT), count(1) DIV 250) AS t"))
+        // one explode materialization feeds the df aggregation and both
+        // self-join sides; one df materialization (|distinct fp| rows)
+        // feeds the histogram stats AND the hot filter — the df
+        // aggregation over the exploded frame is the dominant cost at
+        // stress scale and is paid exactly once
+        val ex = winnowExplode(docs).localCheckpoint()
+        val dfc = ex.groupBy("v").agg(count(lit(1)).as("c")).localCheckpoint()
+        val (tier, eff, _, _, _) = statsFromDf(dfc, tau)
+        val hot = dfc.filter(col("c") > lit(eff)).select("v")
+        val exc = ex.join(hot, Seq("v"), "left_anti")
+          .select(col("doc_id"), col("v"))
+        exc.select(col("doc_id").as("a_id"), col("v"))
+          .join(exc.select(col("doc_id").as("b_id"), col("v")), "v")
+          .filter(col("a_id") < col("b_id"))
+          .groupBy("a_id", "b_id")
+          .agg(count(lit(1)).as("n_shared"))
+          .filter(col("n_shared") >= 3)
+          .select(lit(tier).as("tier"), col("a_id"), col("b_id"),
+            col("n_shared"))
+          .orderBy("a_id", "b_id")
+      }),
 
     Q("q204_boilerplate_lines",
       "line-frequency boilerplate stripping (T113, the C4/Trafilatura " +

@@ -221,14 +221,8 @@ object Curation6 {
         col("ngA"), col("ngB"), col("best"), col("full"))
   }
 
-  private[graft] def exactDup(s: SparkSession, d: String): DataFrame =
-    exactDupFrom(table(s, d, "documents"))
-
-  /** The operator body over an explicit (doc_id, text) frame — the
-    * probe entry (tools/ScaleProbe r24 feeds decorrelated replicas).
-    */
-  private[graft] def exactDupFrom(docs: DataFrame): DataFrame = {
-    val docsH = docs
+  private[graft] def exactDup(s: SparkSession, d: String): DataFrame = {
+    val docsH = table(s, d, "documents")
       .select(col("doc_id"), words(col("text")).as("ws"))
       .filter(size(col("ws")) >= 1)
       .select(col("doc_id"), transform(col("ws"), w => hash32(w)).as("hs"))

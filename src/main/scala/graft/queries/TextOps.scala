@@ -252,8 +252,8 @@ object TextOps {
       (s, d) => {
         // Same banding as q34 but buckets holding > maxBucket docs are
         // dropped before the self-join (a hot band bucket contributes
-        // O(size²) pairs while discriminating nothing — ScaleProbe
-        // measured −49% pairs / −40% wall at 100× with the guard on).
+        // O(size²) pairs while discriminating nothing — a 100× replica
+        // run measured −49% pairs / −40% wall with the guard on).
         // The capped recall is DECLARED semantics here, so the
         // mitigation itself is oracle-hash-checked, not just probed:
         // maxBucket = 2 genuinely binds at sf0.01 (the corpus has

@@ -86,16 +86,6 @@ object TextFunctions {
   def hashedBuckets(ws: Column, buckets: Int): Column =
     transform(ws, w => fingerprint(w) % buckets)
 
-  /** Linear-model raw score over hashed features with a closed-form
-    * integer weight table (`w(b) = b mod 201 − 100`, i.e. −100..100
-    * scaled by 1/100): exact integer arithmetic until the caller's
-    * final division, so engine-exact. A production deployment swaps
-    * the formula for a broadcast learned-weight array; the pipeline
-    * shape (token → bucket → weight → sum) is identical.
-    */
-  def hashedLinearScore(bucketsCol: Column): Column =
-    aggregate(bucketsCol, lit(0L), (acc, b) => acc + (b % 201 - 100))
-
   /** Stopword profiles for the language-ID heuristic (public common-word
     * lists, a few per language).
     */

@@ -12,9 +12,9 @@ import org.apache.spark.sql.execution.exchange.Exchange
   */
 class MeterSpec extends SparkSpec {
 
-  private val fields = Seq("jobs", "stages", "tasks", "executor_run_s",
+  private val fields = Seq("jobs", "stages", "tasks", "scan_tasks", "executor_run_s",
     "executor_cpu_s", "gc_s", "shuffle_write_bytes", "shuffle_read_bytes",
-    "spill_bytes", "peak_exec_mem_bytes", "plan_s", "exchanges",
+    "spill_bytes", "peak_exec_mem_bytes", "plan_s", "compiles", "exchanges",
     "interpreted_lambdas", "batches", "batch_ms")
 
   private object Direct extends AdaptiveSparkPlanHelper {
@@ -50,6 +50,7 @@ class MeterSpec extends SparkSpec {
         assert(l.exchanges > 0, s"$name: $l")
       }
       assert(shuffle.shuffleWriteBytes > 0 && shuffle.shuffleReadBytes > 0, shuffle)
+      assert(shuffle.scanTasks > 0 && shuffle.scanTasks < shuffle.tasks, shuffle)
       assert(shuffle.batches == 0 && checkpointing.batches == 0)
       assert(drain.batches >= 1 && drain.batchMs > 0, drain)
     }
