@@ -14,7 +14,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 /** What the engine reported inside one [[Meter]] window: scheduler and
   * task counts, the plan build time and plan facts of every query
-  * execution that finished, and the micro-batches of streaming drains.
+  * execution that finished, and the micro-batches of streaming drains
+  * with the split of their duration into the engine's reported phases:
+  * `addBatch` (running the batch's plan into the sink), `walCommit`
+  * (the offset log write), `commitOffsets` (the commit log write) and
+  * `queryPlanning` (planning the batch's incremental execution).
   * `scanTasks` counts the tasks of the stages that read files: the scan
   * parallelism the input's file and row-group layout allowed.
   * `compiles` counts the classes Janino compiled in the window,
@@ -25,7 +29,9 @@ final case class Layers(
     executorRunMs: Long = 0L, executorCpuNs: Long = 0L, gcMs: Long = 0L,
     shuffleWriteBytes: Long = 0L, shuffleReadBytes: Long = 0L, spillBytes: Long = 0L,
     peakExecMemBytes: Long = 0L, planMs: Long = 0L, compiles: Long = 0L, exchanges: Long = 0L,
-    interpretedLambdas: Long = 0L, batches: Long = 0L, batchMs: Long = 0L) {
+    interpretedLambdas: Long = 0L, batches: Long = 0L, batchMs: Long = 0L,
+    addBatchMs: Long = 0L, walCommitMs: Long = 0L, commitOffsetsMs: Long = 0L,
+    queryPlanningMs: Long = 0L) {
 
   /** The `layers` record of `BENCH_full.json`: name → JSON number. */
   def attrs: Seq[(String, String)] = {
@@ -41,7 +47,10 @@ final case class Layers(
       "plan_s" -> secs(planMs / 1e3), "compiles" -> compiles.toString,
       "exchanges" -> exchanges.toString,
       "interpreted_lambdas" -> interpretedLambdas.toString,
-      "batches" -> batches.toString, "batch_ms" -> batchMs.toString)
+      "batches" -> batches.toString, "batch_ms" -> batchMs.toString,
+      "add_batch_ms" -> addBatchMs.toString, "wal_commit_ms" -> walCommitMs.toString,
+      "commit_offsets_ms" -> commitOffsetsMs.toString,
+      "query_planning_ms" -> queryPlanningMs.toString)
   }
 }
 
@@ -66,9 +75,16 @@ final class Meter(spark: SparkSession) extends SparkListener
   private val streams = new StreamingQueryListener {
     import StreamingQueryListener._
     def onQueryStarted(e: QueryStartedEvent): Unit = ()
-    def onQueryProgress(e: QueryProgressEvent): Unit =
+    def onQueryProgress(e: QueryProgressEvent): Unit = {
+      val phases = e.progress.durationMs
+      def ms(phase: String): Long = Option(phases.get(phase)).fold(0L)(_.longValue)
       add(l => l.copy(batches = l.batches + 1,
-        batchMs = l.batchMs + e.progress.batchDuration))
+        batchMs = l.batchMs + e.progress.batchDuration,
+        addBatchMs = l.addBatchMs + ms("addBatch"),
+        walCommitMs = l.walCommitMs + ms("walCommit"),
+        commitOffsetsMs = l.commitOffsetsMs + ms("commitOffsets"),
+        queryPlanningMs = l.queryPlanningMs + ms("queryPlanning")))
+    }
     def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
   }
 

@@ -51,9 +51,10 @@ object StallGuard {
         try sc.cancelJobGroup(gid) catch { case _: Throwable => }
         // the group cancel alone is NOT enough: AQE materializes
         // shuffle stages through its own QueryStageCreator threads and
-        // (measured, tools/ProbeCancel) those map-stage jobs do not
-        // carry the caller's job group — cancelJobGroup left the job
-        // running and count() parked in withFinalPlanUpdate forever,
+        // (measured; StallGuardSpec's "a stalled job is cancelled at
+        // the cap" runs the same filtered-range count) those map-stage
+        // jobs do not carry the caller's job group — cancelJobGroup left
+        // the job running and count() parked in withFinalPlanUpdate forever,
         // while cancelAllJobs both failed the job (count threw in
         // ~0.1 s) and actually killed the codegen tasks (0 burning
         // threads after). The bench JVM is single-tenant and runs

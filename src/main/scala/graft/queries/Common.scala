@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.WindowSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DecimalType, LongType, TimestampNTZType, TimestampType}
 
 /** A declared query: Spark implementation + (where SQL-expressible) the
@@ -238,19 +239,82 @@ object Common {
     */
   val DrainShuffle = 8
 
-  /** Run `f` (a streaming drain: build → start → awaitTermination)
-    * with shuffle partitions temporarily at [[DrainShuffle]]; the
-    * prior value is restored even on failure, so later queries in the
-    * shared bench/verify session are unaffected. Stateful operators
-    * read the value at stream START, and each drain's checkpoint dir
-    * is fresh per call, so no checkpoint ever sees two partition
-    * counts.
+  /** Run `f` with shuffle partitions temporarily at [[DrainShuffle]];
+    * the prior value is restored even on failure, so later queries in
+    * the shared bench/verify session are unaffected. [[drain]] wraps
+    * every stream's start and await in it (stateful operators read the
+    * value at stream START, and each drain's checkpoint is fresh per
+    * call, so no checkpoint ever sees two partition counts). q126,
+    * q239, q245 and q257 also scope the batch work around their drains
+    * with it, and q281 (`Embeddings`) its two batch phases, the graph
+    * build and the beam search.
     */
   def withDrainShuffle[A](s: SparkSession)(f: => A): A = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", DrainShuffle.toString)
     try f finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
+
+  /** Drain a stream to completion: `w` carries the caller's sink (output
+    * mode and `foreachBatch`, or the parquet `path`); the checkpoint goes
+    * to `<dir>/_chk`, the `AvailableNow` trigger processes the backlog,
+    * and the start and await run under [[withDrainShuffle]]. Whatever
+    * happens, a query still active is stopped (an interrupted await
+    * must not leave its stream running into the next query) and
+    * `<dir>/_chk` is deleted: nothing reads it again, since
+    * [[scratchDir]] wipes the dir on the next call. A failed batch
+    * surfaces from `awaitTermination`.
+    */
+  def drain(s: SparkSession, dir: String)(w: DataStreamWriter[Row]): Unit = {
+    val chk = s"$dir/_chk"
+    withDrainShuffle(s) {
+      var q: StreamingQuery = null
+      try {
+        q = w.option("checkpointLocation", chk)
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+      } finally {
+        try if (q != null && q.isActive) q.stop()
+        finally deleteTree(java.nio.file.Paths.get(chk))
+      }
+    }
+  }
+
+  /** Micro-batches of a [[stagedStream]]: more than one proves the
+    * incremental state across batches, and each extra batch re-pays
+    * the drain's fixed per-batch cost.
+    */
+  val StagedBatches = 2
+
+  /** Stage `df` as [[StagedBatches]] files range-partitioned on `by` in
+    * the scratch dir `tag`, and stream them back one file per trigger:
+    * [[StagedBatches]] genuine micro-batches.
+    */
+  def stagedStream(df: DataFrame, by: Column, tag: String, d: String): DataFrame = {
+    val dir = scratchDir(tag, d)
+    df.repartitionByRange(StagedBatches, by).write.mode("overwrite").parquet(dir)
+    df.sparkSession.readStream.schema(df.schema)
+      .option("maxFilesPerTrigger", "1").parquet(dir)
+  }
+
+  /** Replay the sf table `name` as a file stream: the source streams the
+    * sf DIRECTORY and `pathGlobFilter` narrows it to the table. The
+    * schema is read through [[table]]'s memo, so `events` must have
+    * `nanosAsLong` set first (see [[events]]).
+    */
+  def replayStream(s: SparkSession, d: String, name: String): DataFrame =
+    s.readStream.schema(table(s, d, name).schema)
+      .option("pathGlobFilter", s"$name.parquet").parquet(d)
+
+  /** Delete `p` and everything under it, if it exists. */
+  private def deleteTree(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p)) {
+      // Files.walk must be closed or it leaks a directory fd per level.
+      val walk = java.nio.file.Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => java.nio.file.Files.deleteIfExists(f))
+      finally walk.close()
+    }
 
   /** Deterministic-per-process scratch directory for streaming-drain
     * queries, deleted and recreated on every call: repeated calls within
@@ -264,13 +328,7 @@ object Common {
     val base = java.nio.file.Paths.get(
       scratchRoot,
       s"graft_${tag}_${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}")
-    if (java.nio.file.Files.exists(base)) {
-      // Files.walk must be closed or it leaks a directory fd per level.
-      val walk = java.nio.file.Files.walk(base)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
-    }
+    deleteTree(base)
     java.nio.file.Files.createDirectories(base)
     base.toString
   }

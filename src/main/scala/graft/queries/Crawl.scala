@@ -1685,7 +1685,6 @@ object Crawl {
       (s, d) => {
         import s.implicits._
         import graft.text.Urls
-        val schema = table(s, d, "documents").schema
         val scratch = Common.scratchDir("stream_frontier", d)
         // the per-HOST robots dimension is STATIC state the frontier
         // maintains next to the stream (round 11: parse once per host;
@@ -1697,8 +1696,7 @@ object Crawl {
         // repeated corpus scan (review-r11 finding)
         val rules = hostRobots(s, table(s, d, "documents"))
           .localCheckpoint()
-        val pages = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet").parquet(d)
+        val pages = Common.replayStream(s, d, "documents")
           .select(col("doc_id")).as[Long]
           .flatMap { id =>
             val g = id % 97
@@ -1720,14 +1718,8 @@ object Crawl {
           .withColumn("ts", timestamp_seconds(lit(1700000000L)))
           .withWatermark("ts", "1 hour")
           .dropDuplicatesWithinWatermark("url")
-        Common.withDrainShuffle(s) {
-          val query = urls.writeStream
-            .format("parquet")
-            .option("path", s"$scratch/data")
-            .option("checkpointLocation", s"$scratch/chk")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          query.awaitTermination()
+        Common.drain(s, scratch) {
+          urls.writeStream.format("parquet").option("path", s"$scratch/data")
         }
         s.read.parquet(s"$scratch/data")
           .groupBy("host", "delay_s")
@@ -2415,7 +2407,6 @@ object Crawl {
         ORDER BY url"""),
       (s, d) => {
         import org.apache.spark.sql.DataFrame
-        import org.apache.spark.sql.streaming.Trigger
         val events = table(s, d, "documents").select(
           concat(lit("http://ex"), (col("doc_id") % 120) % 97,
             lit(".test/u"), col("doc_id") % 120).as("url"),
@@ -2441,17 +2432,13 @@ object Crawl {
             sum("n_errors").as("n_errors"),
             min("first_ts").as("first_ts"),
             max("last").as("last"))
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
-          val inDir = Common.scratchDir("ledger_in", d)
+        Common.withDrainShuffle(s) {
           // TWO micro-batches (round-15, VERDICT-r14 item 2): >1 batch
           // proves the incremental merge + applied-batch watermark;
           // the restart/exactly-once proof lives in LedgerStoreSpec,
           // and each extra batch re-pays the fixed per-batch ledger
           // commit + scheduling cost
-          events.repartitionByRange(2, col("ts"))
-            .write.mode("overwrite").parquet(inDir)
+          val stream = Common.stagedStream(events, col("ts"), "ledger_in", d)
           val chkDir = Common.scratchDir("ledger_chk", d)
           // restart-safe exactly-once (VERDICT-r12 item 1): the ledger
           // and the applied-batch watermark persist ATOMICALLY per
@@ -2470,11 +2457,8 @@ object Crawl {
             s"$chkDir/ledger")
           var (ledger, lastApplied) =
             store.recover(toLedger(events.limit(0)))
-          val q = s.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "1").parquet(inDir)
-            .writeStream
-            .option("checkpointLocation", s"$chkDir/_chk")
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          Common.drain(s, chkDir) {
+            stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
               if (batchId > lastApplied) {
                 ledger = store.commit(
                   merge(ledger, toLedger(batch)), batchId)
@@ -2482,9 +2466,7 @@ object Crawl {
               }
               ()
             }
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          }
           ledger.select(col("url"), col("n_fetches"), col("n_errors"),
             col("first_ts"),
             col("last.ts").as("last_ts"),
@@ -2495,7 +2477,7 @@ object Crawl {
               .when(col("last.status") === 304, "skip")
               .otherwise("refetch").as("action"))
             .orderBy("url")
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+        }
       }),
 
     Q("q240_robots_fetch_policy",
@@ -2946,7 +2928,6 @@ object Crawl {
       (s, d) => {
         import s.implicits._
         import org.apache.spark.sql.DataFrame
-        import org.apache.spark.sql.streaming.Trigger
         import graft.multimodal.Http
         // the origin: current entity of url k is CONSTANT — etag
         // "ok%7" (quoted, the RFC 9110 §8.8.3 wire form), body
@@ -3015,15 +2996,11 @@ object Crawl {
           ledger.join(updates.select("k"), Seq("k"), "left_anti")
             .union(updates)
         }
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
-          val inDir = Common.scratchDir("refetch_in", d)
+        Common.withDrainShuffle(s) {
           // TWO micro-batches (round-15, VERDICT-r14 item 2) — same
           // rationale as q239's trim: incrementality needs >1 batch,
           // restart-safety is LedgerStoreSpec's job
-          events.repartitionByRange(2, col("ts"))
-            .write.mode("overwrite").parquet(inDir)
+          val stream = Common.stagedStream(events, col("ts"), "refetch_in", d)
           val chkDir = Common.scratchDir("refetch_chk", d)
           // same restart-safe discipline as q239 (VERDICT-r12 item 1):
           // ledger + applied-batch watermark persist atomically per
@@ -3032,25 +3009,20 @@ object Crawl {
           val store = new graft.streaming.LedgerStore(s,
             s"$chkDir/ledger")
           var (ledger, lastApplied) = store.recover(ledger0)
-          val q = s.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "1").parquet(inDir)
-            .writeStream
-            .option("checkpointLocation", s"$chkDir/_chk")
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          Common.drain(s, chkDir) {
+            stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
               if (batchId > lastApplied) {
                 ledger = store.commit(step(ledger, batch), batchId)
                 lastApplied = batchId
               }
               ()
             }
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          }
           ledger.select(col("url"), col("n_fetches"), col("n_200"),
             col("n_304"), col("etag"), col("digest"), col("last_ts"),
             col("bytes_fetched"))
             .orderBy("url")
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+        }
       }),
 
     Q("q246_frontier_capstone",
@@ -3992,7 +3964,6 @@ object Crawl {
       Some(decisionCapstoneOracle),
       (s, d) => {
         import org.apache.spark.sql.DataFrame
-        import org.apache.spark.sql.streaming.Trigger
         val docsT = table(s, d, "documents")
         // batch contribution → ledger rows (union schema: edge rows
         // keyed (src,dst), mass rows keyed by the host residue g)
@@ -4029,10 +4000,7 @@ object Crawl {
             apportion(rankFromEdges(edges, nodes), 100000L),
             hostDecisionDim(s, massL))
         }
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
-          val inDir = Common.scratchDir("decision_in", d)
+        Common.withDrainShuffle(s) {
           // TWO micro-batches (round-15, VERDICT-r14 item 2 — was 4,
           // then 3 in r14): the standing-re-evaluation semantics need
           // >1 batch and the restart proof lives in LedgerStoreSpec,
@@ -4045,19 +4013,15 @@ object Crawl {
           // for nothing, and the description's "payload text never
           // enters the ledger" now holds for the staging leg too.
           val staged = docsT.select(col("doc_id"))
-          staged.repartitionByRange(2, col("doc_id"))
-            .write.mode("overwrite").parquet(inDir)
+          val stream = Common.stagedStream(staged, col("doc_id"), "decision_in", d)
           val chkDir = Common.scratchDir("decision_chk", d)
           val store = new graft.streaming.LedgerStore(s,
             s"$chkDir/ledger")
           var (ledger, lastApplied) =
             store.recover(toLedger(staged.limit(0)))
           var decision: DataFrame = null
-          val q = s.readStream.schema(staged.schema)
-            .option("maxFilesPerTrigger", "1").parquet(inDir)
-            .writeStream
-            .option("checkpointLocation", s"$chkDir/_chk")
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          Common.drain(s, chkDir) {
+            stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
               if (batchId > lastApplied) {
                 ledger = store.commit(
                   merge(ledger, toLedger(batch)), batchId)
@@ -4068,14 +4032,12 @@ object Crawl {
               }
               ()
             }
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          }
           // a restarted drain with zero new batches recovers the
           // ledger and re-evaluates (decision derives from state)
           if (decision == null) decision = evaluate(ledger)
           decision.orderBy("host")
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+        }
       }),
 
     Q("q258_coding_audit",

@@ -210,30 +210,23 @@ object Events {
         // The real streaming write path (not a memory sink): file-source
         // stream over the same events parquet → EventStream.tumblingCounts
         // → foreachBatch parquet drain in complete mode (each batch
-        // overwrites with full state; AvailableNow processes everything
+        // overwrites with full state; the drain processes everything
         // and terminates). The drained table must hash-match the batch
         // q23 oracle — stream/batch equivalence as a driver-checked
         // gate, not just a spec.
-        import org.apache.spark.sql.streaming.Trigger
+        // nanosAsLong before the schema is read: the replayed schema
+        // must be the shimmed one (see Common.events)
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val raw = s.read.parquet(s"$d/events.parquet")
-        // the file source streams a directory; pathGlobFilter narrows it
-        // to the events table
-        val stream = normalizeTs(s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "events.parquet").parquet(d))
+        val stream = normalizeTs(replayStream(s, d, "events"))
         val outDir = scratchDir("drain", d)
-        Common.withDrainShuffle(s) {
-          val q = graft.streaming.EventStream.tumblingCounts(stream)
+        drain(s, outDir) {
+          graft.streaming.EventStream.tumblingCounts(stream)
             .writeStream
             .outputMode("complete")
-            .option("checkpointLocation", s"$outDir/_chk")
             .foreachBatch {
               (batch: org.apache.spark.sql.DataFrame, _: Long) =>
                 batch.write.mode("overwrite").parquet(s"$outDir/table")
             }
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
         }
         s.read.parquet(s"$outDir/table")
           .orderBy("window_start", "event_type")
@@ -335,21 +328,14 @@ object Events {
             AS n_clicks
         FROM err e ORDER BY err_id"""),
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         val ev = events(s, d)
         val err = ev.filter(col("event_type") === "error")
           .select(col("event_id").as("err_id"), col("user_id"),
             col("ts").as("err_ts"))
         val clk = ev.filter(col("event_type") === "click")
           .select(col("user_id").as("c_user"), col("ts").as("clk_ts"))
-        // stage each side as 2 files → both streams advance in genuine
-        // micro-batches, so cross-batch matches exercise the join state
-        val errDir = scratchDir("ssj_err", d)
-        val clkDir = scratchDir("ssj_clk", d)
-        err.repartitionByRange(2, col("err_id"))
-          .write.mode("overwrite").parquet(errDir)
-        clk.repartitionByRange(2, col("c_user"))
-          .write.mode("overwrite").parquet(clkDir)
+        // each side is a staged stream → both advance in genuine
+        // micro-batches, so cross-batch matches exercise the join state.
         // Watermarks bound the symmetric join state; the range condition
         // gives Spark both time bounds, so click state older than
         // watermark − 30 min is evictable. The 31-day delay covers the
@@ -357,11 +343,9 @@ object Events {
         // any tighter bound could drop genuinely-matching rows — a
         // production feed with bounded disorder tightens this to its
         // real lateness SLA and gets proportionally smaller state).
-        val errS = s.readStream.schema(err.schema)
-          .option("maxFilesPerTrigger", "1").parquet(errDir)
+        val errS = stagedStream(err, col("err_id"), "ssj_err", d)
           .withWatermark("err_ts", "31 days")
-        val clkS = s.readStream.schema(clk.schema)
-          .option("maxFilesPerTrigger", "1").parquet(clkDir)
+        val clkS = stagedStream(clk, col("c_user"), "ssj_clk", d)
           .withWatermark("clk_ts", "31 days")
         val joined = errS.join(clkS,
           col("user_id") === col("c_user") &&
@@ -373,18 +357,12 @@ object Events {
         // partition per micro-batch; the partition count is frozen into
         // the checkpoint at first start. At this drain's volume, 32
         // partitions are pure commit overhead (measured 8.8 s → mostly
-        // state-store churn), so the streaming stage runs at 8 — a
+        // state-store churn), so the drain runs at DrainShuffle — a
         // production feed sizes this to its throughput ONCE, up front,
         // since it cannot change without a new checkpoint.
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
-          val q = joined.writeStream.format("parquet")
-            .option("path", s"$outDir/data")
-            .option("checkpointLocation", s"$outDir/_chk")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+        drain(s, outDir) {
+          joined.writeStream.format("parquet").option("path", s"$outDir/data")
+        }
         val matched = s.read.schema(joined.schema).parquet(s"$outDir/data")
         val counts = matched.groupBy(col("err_id"))
           .agg(count(lit(1)).as("n_clicks"))

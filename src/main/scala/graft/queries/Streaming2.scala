@@ -30,26 +30,15 @@ object Streaming2 {
         // harness pattern); a far-future watermark keeps every row
         // inside the dedup window for this bounded replay while the
         // OPERATOR is the state-evicting production form
-        val schema = table(s, d, "documents").schema
-        val scratch = Common.scratchDir("stream_wmdedup", d)
-        // the file source streams a DIRECTORY; pathGlobFilter narrows
-        // it to the documents table (the q88/q102 harness pattern)
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet").parquet(d)
+        val scratch = scratchDir("stream_wmdedup", d)
+        val stream = replayStream(s, d, "documents")
           .select(col("source"), md5(encode(col("text"), "UTF-8")).as("dg"),
             // synthetic event time: digest-derived, stable across runs
             timestamp_seconds(lit(1700000000L)).as("ts"))
           .withWatermark("ts", "1 hour")
           .dropDuplicatesWithinWatermark("source", "dg")
-        Common.withDrainShuffle(s) {
-          val query = stream.writeStream
-            .format("parquet")
-            .option("path", s"$scratch/data")
-            .option("checkpointLocation", s"$scratch/chk")
-            .trigger(
-              org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          query.awaitTermination()
+        drain(s, scratch) {
+          stream.writeStream.format("parquet").option("path", s"$scratch/data")
         }
         s.read.parquet(s"$scratch/data")
           .select("source", "dg").orderBy("source", "dg")
@@ -89,8 +78,6 @@ object Streaming2 {
           FROM hits GROUP BY e_id) g ON ev.doc_id = g.e_id
         ORDER BY ev.doc_id"""),
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        import graft.ops.Hashing
         // standing side: the accepted corpus's hash sets + positional
         // inverted index, built once outside the stream (the q102
         // stream-static pattern); the hash frame is checkpointed so
@@ -122,11 +109,10 @@ object Streaming2 {
           .repartition(Common.DrainShuffle, col("h"))
           .sortWithinPartitions("h")
           .localCheckpoint()
-        val stream = s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "documents.parquet").parquet(d)
+        val stream = replayStream(s, d, "documents")
           .filter(col("doc_id") % 10 === 0)
           .select("doc_id", "text")
-        val outDir = Common.scratchDir("scontain", d)
+        val outDir = scratchDir("scontain", d)
         // Seed the sink with a zero-row frame of the result schema
         // (ADVICE-r8): if no arriving docs exist (no doc_id % 10 == 0
         // rows, or the glob matches nothing) foreachBatch never writes,
@@ -143,10 +129,9 @@ object Streaming2 {
                 org.apache.spark.sql.types.LongType),
               org.apache.spark.sql.types.StructField("first_match", idType))))
           .write.mode("append").parquet(s"$outDir/table")
-        Common.withDrainShuffle(s) {
-        val q = stream.writeStream
+        drain(s, outDir) {
+        stream.writeStream
           .outputMode("append")
-          .option("checkpointLocation", s"$outDir/_chk")
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             val eh = hashFrame(batch).toDF("e_id", "e_hs").localCheckpoint()
             val cand = eh.select(col("e_id"), size(col("e_hs")).as("na"),
@@ -179,9 +164,6 @@ object Streaming2 {
                 col("fm").as("first_match"))
               .write.mode("append").parquet(s"$outDir/table")
           }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
         }
         } finally {
           // release the pinned index/train blocks — the drained result

@@ -423,13 +423,11 @@ object TextOps {
         // and are exact-dedup-checked against the static corpus digest
         // store with a stateless stream-static left join (no watermark,
         // no state store — the static side is the lookup). foreachBatch
-        // appends each micro-batch to parquet; AvailableNow terminates
+        // appends each micro-batch to parquet; the drain terminates
         // after the backlog. Driver-checked against the batch oracle =
         // stream/batch equivalence as a correctness gate.
-        import org.apache.spark.sql.streaming.Trigger
         val raw = table(s, d, "documents")
-        val stream = s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "documents.parquet").parquet(d)
+        val stream = replayStream(s, d, "documents")
           .filter(col("doc_id") % 10 === 0)
           .select(col("doc_id"), Dedup.digest(col("text")).as("h"))
         val store = raw.filter(col("doc_id") % 10 =!= 0)
@@ -438,17 +436,13 @@ object TextOps {
         val joined = stream.join(store, Seq("h"), "left")
           .select(col("doc_id"), coalesce(col("hit"), lit(false)).as("is_exact"))
         val outDir = scratchDir("sdedup", d)
-        Common.withDrainShuffle(s) {
-          val q = joined.writeStream
+        drain(s, outDir) {
+          joined.writeStream
             .outputMode("append")
-            .option("checkpointLocation", s"$outDir/_chk")
             .foreachBatch {
               (batch: org.apache.spark.sql.DataFrame, _: Long) =>
                 batch.write.mode("append").parquet(s"$outDir/table")
             }
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
         }
         s.read.parquet(s"$outDir/table").orderBy("doc_id")
       }),

@@ -15,7 +15,8 @@ class MeterSpec extends SparkSpec {
   private val fields = Seq("jobs", "stages", "tasks", "scan_tasks", "executor_run_s",
     "executor_cpu_s", "gc_s", "shuffle_write_bytes", "shuffle_read_bytes",
     "spill_bytes", "peak_exec_mem_bytes", "plan_s", "compiles", "exchanges",
-    "interpreted_lambdas", "batches", "batch_ms")
+    "interpreted_lambdas", "batches", "batch_ms", "add_batch_ms", "wal_commit_ms",
+    "commit_offsets_ms", "query_planning_ms")
 
   private object Direct extends AdaptiveSparkPlanHelper {
     def exchanges(plan: SparkPlan): Int =
@@ -53,6 +54,9 @@ class MeterSpec extends SparkSpec {
       assert(shuffle.scanTasks > 0 && shuffle.scanTasks < shuffle.tasks, shuffle)
       assert(shuffle.batches == 0 && checkpointing.batches == 0)
       assert(drain.batches >= 1 && drain.batchMs > 0, drain)
+      // the phase split: a drain's batches spend time running into the sink
+      assert(drain.addBatchMs > 0 && drain.addBatchMs <= drain.batchMs, drain)
+      assert(shuffle.addBatchMs == 0 && checkpointing.queryPlanningMs == 0)
     }
   }
 
