@@ -40,24 +40,20 @@ object ExprHelpers {
     override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
   }
 
-  /** First 4 md5 bytes as unsigned 32-bit (== Hashing.hash32). */
-  private def h32(md: MessageDigest, s: String): Long = {
-    val d = md.digest(s.getBytes("UTF-8"))
-    md.reset()
-    ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-      ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-  }
-
-  /** [[h32]] straight off a UTF8String's UTF-8 bytes (no String
-    * round-trip — `UTF8String.getBytes` IS the `encode(x, 'UTF-8')`
-    * byte sequence).
+  /** First 4 md5 bytes of a string's UTF-8 bytes as unsigned 32-bit
+    * (== Hashing.hash32); `digest` also resets `md`.
     */
-  private def h32u(md: MessageDigest, s: UTF8String): Long = {
-    val d = md.digest(s.getBytes)
-    md.reset()
+  private def h32(md: MessageDigest, utf8: Array[Byte]): Long = {
+    val d = md.digest(utf8)
     ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
       ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
   }
+  private def h32(md: MessageDigest, s: String): Long = h32(md, s.getBytes("UTF-8"))
+
+  /** [[h32]] straight off a UTF8String's bytes, no String round trip
+    * (`UTF8String.getBytes` IS the `encode(x, 'UTF-8')` byte sequence).
+    */
+  private def h32u(md: MessageDigest, s: UTF8String): Long = h32(md, s.getBytes)
 
   /** Elementwise md5-prefix hash32 of a string array in one pass (see
     * [[Hash32ArrayExpr]]). Modes replicate the exact HOF compositions
@@ -173,7 +169,7 @@ object ExprHelpers {
     while (i < arr.numElements()) {
       if (!arr.isNullAt(i)) {
         seen = true
-        val hp = h32(md, arr.getUTF8String(i).toString) % Hashing.P
+        val hp = h32u(md, arr.getUTF8String(i)) % Hashing.P
         var k = 0
         while (k < numHashes) {
           val v = (hp * Hashing.HashA(k) + Hashing.HashB(k)) % Hashing.P

@@ -25,10 +25,11 @@ object Hashing {
   def affine(x: Column, a: Long, b: Long): Column = (x % P * a + b) % P
 
   /** Multiplier/offset constants for the minhash family (public
-    * Knuth/xxhash-style odd constants).
+    * Knuth/xxhash-style odd constants). Arrays: the per-shingle minhash
+    * loops index them on every hash.
     */
-  val HashA: Seq[Long] = Seq(2654435761L, 2246822519L, 3266489917L,
+  val HashA: Array[Long] = Array(2654435761L, 2246822519L, 3266489917L,
     668265263L, 374761393L, 3041204507L, 1181783497L, 2545602969L)
-  val HashB: Seq[Long] = Seq(12345L, 67890L, 13579L, 24680L,
+  val HashB: Array[Long] = Array(12345L, 67890L, 13579L, 24680L,
     11111L, 22222L, 33333L, 44444L)
 }

@@ -152,8 +152,9 @@ object Entities {
   }
 
   // ------------------------------------------------------------ Purchases
-  /** qb_purchases.py:91-175 (stage) and :185-225 (warehouse; also fixes
-    * the leaked temp table — moot here, overwrite is atomic).
+  /** qb_purchases.py:91-175 (stage) and :185-225 (warehouse; no temp
+    * table leaks here, but the overwrite is NOT atomic: see
+    * [[graft.load.Warehouse]]).
     */
   object Purchases {
     val selected: Seq[String] = Seq("PaymentType", "Credit", "TotalAmt", "Id",

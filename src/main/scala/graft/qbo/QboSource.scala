@@ -20,7 +20,7 @@ import graft.sources.{QboPagePartition, QboTable}
   * Scale note: with a real paginated API the pages become input
   * partitions (each executor task fetches its own page range — the
   * `qbo` source's strided fan-out); here the page envelopes are
-  * already strings, one input partition each.
+  * already held, one input partition each.
   */
 trait QboApi {
   /** One page of entity-query results, 1-based start position. */
@@ -101,5 +101,6 @@ object QboSource {
   def entityFrame(spark: SparkSession, entity: String, pages: Seq[String],
       schema: StructType): DataFrame =
     Bridge.ofRows(spark, DataSourceV2Relation.create(
-      new QboTable(schema, entity, pages.map(QboPagePartition)), None, None))
+      new QboTable(schema, entity,
+        pages.map(p => QboPagePartition(p.getBytes("UTF-8")))), None, None))
 }

@@ -107,7 +107,7 @@ object Common {
   /** Portable 32-bit string hash: first 8 hex chars of md5 as a BIGINT.
     * Spark and DuckDB md5 agree byte-for-byte, which gives us one
     * deterministic hash family usable on both sides (minhash, simhash,
-    * LSH). Spark side: [[hash32]].
+    * LSH). Spark side: [[graft.ops.Hashing.hash32]].
     */
   def sqlHash32(e: String): String =
     s"CAST('0x' || substr(md5($e), 1, 8) AS BIGINT)"
@@ -117,9 +117,6 @@ object Common {
     * portable-hash and tokenization contracts must not fork per file.
     */
   val sqlWords = """regexp_split_to_array(text, '\s+')"""
-
-  def hash32(c: Column): Column =
-    conv(substring(md5(encode(c, "UTF-8")), 1, 8), 16, 10).cast("long")
 
   /** Per-thread MD5 instance for per-row hot loops (the
     * ExprHelpers.mdPool / Warc.sha1Pool convention — a
@@ -316,15 +313,33 @@ object Common {
       finally walk.close()
     }
 
+  /** Delete the `graft_*_p<pid>` dirs under [[scratchRoot]] whose JVM
+    * has exited; a live JVM's dirs are never touched.
+    */
+  private[graft] def sweepDeadScratch(): Unit = {
+    val owned = """graft_.+_p(\d{1,18})""".r
+    val root = java.nio.file.Paths.get(scratchRoot)
+    if (java.nio.file.Files.isDirectory(root)) {
+      val ls = java.nio.file.Files.list(root)
+      try ls.forEach(p => p.getFileName.toString match {
+        case owned(pid) if ProcessHandle.of(pid.toLong).isEmpty => deleteTree(p)
+        case _ => ()
+      }) finally ls.close()
+    }
+  }
+  private lazy val deadScratchSwept: Unit = sweepDeadScratch()
+
   /** Deterministic-per-process scratch directory for streaming-drain
     * queries, deleted and recreated on every call: repeated calls within
     * one bench/verify JVM reuse ONE directory per (tag, input dir)
     * instead of leaking a fresh createTempDirectory (checkpoint +
     * drained parquet) each invocation. The path carries the JVM pid so
     * two concurrent runs over the same input (bench alongside verify)
-    * cannot wipe each other's live streaming checkpoints.
+    * cannot wipe each other's live streaming checkpoints; the first call
+    * in a JVM sweeps the dirs of JVMs that have exited.
     */
   def scratchDir(tag: String, dir: String): String = {
+    deadScratchSwept
     val base = java.nio.file.Paths.get(
       scratchRoot,
       s"graft_${tag}_${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}")

@@ -1403,7 +1403,7 @@ object Crawl {
           .select(col("source"), explode(expr(
             "array_distinct(transform(sequence(1, size(ws)-2), " +
               "i -> concat_ws(' ', slice(ws, i, 3))))")).as("sh"))
-          .select(col("source"), Common.hash32(col("sh")).as("h"))
+          .select(col("source"), graft.ops.Hashing.hash32(col("sh")).as("h"))
           .distinct()
           .localCheckpoint() // counts + both self-join sides
         val counts = ex.groupBy("source").agg(count(lit(1)).as("n"))

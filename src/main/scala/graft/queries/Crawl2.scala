@@ -405,7 +405,7 @@ object Crawl2 {
               .cast("long"))
           .groupBy("g", "delay_s")
           .agg(count(lit(1)).as("n"),
-            sum(Common.hash32(col("url"))).as("usum"))
+            sum(graft.ops.Hashing.hash32(col("url"))).as("usum"))
         byHost
           .groupBy(concat(lit("10.0."), col("g") % 24, lit(".1"))
             .as("ip"))

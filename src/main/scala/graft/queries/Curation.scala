@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import Common._
 import graft.ops.Hashing
+import graft.ops.Hashing.hash32
 import graft.text.TextFunctions._
 
 /** Round-6 curation wave (SURVEY §2.7 T59–T63): data-driven domain

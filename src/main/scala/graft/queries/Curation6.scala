@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
 
 import Common._
+import graft.ops.Hashing.hash32
 import graft.text.TextFunctions.words
 
 /** Round-15 curation wave (SURVEY §2.7 T190): EXACT any-length

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import Common._
+import graft.ops.Hashing.hash32
 import graft.similarity.Vectors
 
 /** Similarity-search query surface over `embeddings` (64-dim float

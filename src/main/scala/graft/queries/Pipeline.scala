@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.DecimalType
 import Common._
 import graft.dedup.Dedup
 import graft.ops.Hashing
+import graft.ops.Hashing.hash32
 import graft.text.TextFunctions._
 
 /** Training-data pipeline operators beyond per-document text analysis:

@@ -1,13 +1,15 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util
 
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import com.fasterxml.jackson.core.JsonFactory
 import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JacksonParser, JSONOptions}
+import org.apache.spark.sql.catalyst.json.{JacksonParser, JSONOptions}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -17,7 +19,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.qbo.{QboSource, Schemas}
+import graft.qbo.{Fixtures, QboSource, Schemas}
 
 /** DataSource V2 implementation of the QBO entity-query source
   * (SURVEY §2.1 S2-S4): `spark.read.format("qbo").option("entity",
@@ -56,10 +58,6 @@ class QboDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    // Cluster-real backend (VERDICT-r9 item 6): when the options carry
-    // an HTTP endpoint + token config, the scan serializes a
-    // QboHttpFeedConfig into each strided partition — executors fetch
-    // pages themselves, no driver-JVM registry involved.
     val http = Option(properties.get("httpBaseUrl")).map { base =>
       def req(k: String): String = Option(properties.get(k)).getOrElse(
         throw new IllegalArgumentException(
@@ -72,9 +70,7 @@ class QboDataSource extends TableProvider with DataSourceRegister {
       Option(properties.get("fetchPartitions")).map(_.toInt).getOrElse(1)
     /* Two page→partition strategies:
      *  - default (`fetchPartitions` ≤ 1, registry backend): the feed's
-     *    known page list, one page per partition — right when pages
-     *    are already local strings (fixtures) or the page count is
-     *    known;
+     *    known page list, one page per partition;
      *  - speculative fan-out (`fetchPartitions` = P > 1, or ANY http
      *    backend — its page count is unknowable driver-side): P
      *    strided partitions, each carrying a serialized
@@ -89,13 +85,9 @@ class QboDataSource extends TableProvider with DataSourceRegister {
     val partitions: Seq[InputPartition] =
       if (fetchPartitions > 1 || http.isDefined) {
         val p = fetchPartitions.max(1)
-        // structural config checks are location-independent — run them
-        // HERE so a malformed endpoint/credential set fails the PLAN,
-        // before any task launches (executor-side createReader
-        // validation alone surfaces as task retries).
-        // The registry fetcher's validate stays executor-side only:
-        // its question — is the fixture registry populated in THIS
-        // JVM — is exactly per-JVM.
+        // a malformed endpoint/credential set fails the PLAN, before
+        // any task launches; the registry check stays in the reader,
+        // because whether the registry is populated is per-JVM
         http.foreach(_.validate())
         val fetcher: QboPageFetcher =
           http.getOrElse(QboRegistryFetcher(properties.get("feed")))
@@ -116,37 +108,31 @@ object QboDataSource {
   }
 }
 
-/** Named offline page feeds (fixture-backed "API"). */
+/** Named offline page feeds (fixture-backed "API"), each page encoded
+  * to UTF-8 once, at registration.
+  */
 object QboPageFeeds {
-  private val feeds = scala.collection.concurrent.TrieMap[String, Seq[String]](
-    "bills" -> graft.qbo.Fixtures.billPages,
-    "billpayments" -> graft.qbo.Fixtures.billPaymentPages,
-    "journalentries" -> graft.qbo.Fixtures.journalEntryPages,
-    "purchases" -> graft.qbo.Fixtures.purchasePages,
-    "deposits" -> graft.qbo.Fixtures.depositPages)
-  // Retry-contract test plumbing (VERDICT-r8 item 4): per-(feed, page)
-  // injected transient failures — the fixture twin of a flaky HTTP
-  // fetch — plus a per-feed fetch-attempt counter, so a spec can prove
-  // the at-least-once-HTTP / exactly-once-rows contract under Spark's
-  // task retry (the failed attempt's rows are discarded wholesale; the
-  // retry re-fetches its whole stride). ADVICE-r9: the instrumentation
-  // is GATED — production fetches skip the counter/fault lookups
-  // entirely unless a spec has switched it on — and resettable, so the
-  // registries cannot grow unbounded across a long spec run.
+  private val feeds = scala.collection.concurrent.TrieMap[String, IndexedSeq[Array[Byte]]]()
+  Seq("bills" -> Fixtures.billPages, "billpayments" -> Fixtures.billPaymentPages,
+    "journalentries" -> Fixtures.journalEntryPages, "purchases" -> Fixtures.purchasePages,
+    "deposits" -> Fixtures.depositPages).foreach { case (n, pages) => register(n, pages) }
+  // Retry-contract test plumbing: per-(feed, page) injected transient
+  // failures (the fixture twin of a flaky HTTP fetch) and a per-feed
+  // fetch counter, so a spec can prove at-least-once fetches and
+  // exactly-once rows under Spark's task retry. Gated: fetches skip
+  // both lookups unless a spec injected a fault; reset clears both.
   @volatile private var instrumented = false
   private val faults = scala.collection.concurrent
     .TrieMap[(String, Int), java.util.concurrent.atomic.AtomicInteger]()
   private val calls = scala.collection.concurrent
     .TrieMap[String, java.util.concurrent.atomic.AtomicInteger]()
 
-  def register(name: String, pages: Seq[String]): Unit = feeds.put(name, pages)
+  def register(name: String, pages: Seq[String]): Unit =
+    feeds.put(name, pages.map(_.getBytes(UTF_8)).toIndexedSeq)
   def known(name: String): Boolean = feeds.contains(name)
-  def pages(name: String): Seq[String] =
+  def pages(name: String): IndexedSeq[Array[Byte]] =
     feeds.getOrElse(name,
       throw new IllegalArgumentException(s"unknown feed: $name"))
-
-  /** Turn on fetch counting (test-only; implied by [[injectFault]]). */
-  def enableInstrumentation(): Unit = instrumented = true
 
   /** Clear injected faults + counters and stop counting (spec teardown). */
   def resetInstrumentation(): Unit = {
@@ -172,7 +158,7 @@ object QboPageFeeds {
     * (every full page of the real API is exactly 100 rows, so the
     * position arithmetic is exact — SURVEY §2.1 S3/S4).
     */
-  def feedPage(name: String, idx: Int): Option[String] = {
+  def feedPage(name: String, idx: Int): Option[Array[Byte]] = {
     val ps = pages(name)
     if (instrumented) {
       calls.getOrElseUpdate(name,
@@ -191,12 +177,12 @@ object QboPageFeeds {
   * independently on a real cluster. `validate()` runs once at reader
   * creation for a loud misconfiguration error; `fetch(idx)` returns
   * None where the backend knows it is past the feed's end, and
-  * otherwise the page body unparsed — the reader's one parse of it
-  * stops the stride at an empty or absent entity array.
+  * otherwise the page body's UTF-8 bytes unparsed — the reader's one
+  * parse of them stops the stride at an empty or absent entity array.
   */
 trait QboPageFetcher extends Serializable {
   def validate(): Unit = ()
-  def fetch(idx: Int): Option[String]
+  def fetch(idx: Int): Option[Array[Byte]]
 }
 
 /** Local-mode fixture fetcher: resolves pages through the driver-JVM
@@ -213,38 +199,29 @@ final case class QboRegistryFetcher(feed: String) extends QboPageFetcher {
           "backend); for a cluster deployment pass an HTTP fetch config " +
           "(httpBaseUrl/realm/token options) so the partition carries a " +
           "serialized QboHttpFeedConfig instead.")
-  override def fetch(idx: Int): Option[String] = QboPageFeeds.feedPage(feed, idx)
+  override def fetch(idx: Int): Option[Array[Byte]] = QboPageFeeds.feedPage(feed, idx)
 }
 
-/** Cluster-real fetch handle: endpoint + OAuth2 token-source CONFIG
-  * (all plain strings — a tiny serializable closure, not data). Each
-  * executor task lazily builds its own [[graft.qbo.QboHttpApi]] +
-  * [[graft.qbo.QboOAuth2TokenSource]] from the config and issues the
-  * paged entity query right there (`STARTPOSITION (idx-1)·100+1`,
-  * SURVEY §2.1 S3); an empty/absent entity array marks past-the-end.
-  * Tokens refresh independently per task — each task deserializes its
-  * own copy of this config and so builds its own client and token
-  * source; the QBO token endpoint serves concurrent refreshes, and
-  * each task's 401-retry path is the same
-  * [[graft.qbo.QboHttpApi.sendAuthed]] shell the driver uses.
+/** Cluster-real fetch handle: endpoint + OAuth2 token-source CONFIG,
+  * all plain strings. Each task deserializes its own copy, so it builds
+  * its own [[graft.qbo.QboHttpApi]] and token source (and refreshes its
+  * own token); the connections underneath are the JVM's shared
+  * keep-alive cache. Page `idx` is `STARTPOSITION (idx-1)·100+1`
+  * (SURVEY §2.1 S3); its body bytes go to the reader unparsed.
   */
 final case class QboHttpFeedConfig(baseUrl: String, realm: String,
     entity: String, tokenUrl: String, clientId: String,
     clientSecret: String, refreshToken: String) extends QboPageFetcher {
-  // this config is serialized into every QboStridePartition, so the
-  // case-class toString would print credentials verbatim in task-
-  // failure logs / Spark UI partition descriptions (ADVICE r10) —
-  // show only the non-secret routing fields
+  // serialized into every partition: the case-class toString would
+  // print the credentials in task-failure logs and the Spark UI
   override def toString: String =
     s"QboHttpFeedConfig($baseUrl,$realm,$entity,$tokenUrl," +
       "clientId=***,clientSecret=***,refreshToken=***)"
   @transient private lazy val api = new graft.qbo.QboHttpApi(baseUrl, realm,
     new graft.qbo.QboOAuth2TokenSource(tokenUrl, clientId, clientSecret,
       refreshToken))
-  // loud misconfiguration at READER CREATION (the trait contract —
-  // review-r10 caught that only the registry fetcher honored it): a
-  // malformed endpoint/credential config must fail the plan, not
-  // surface task-retries deep into the first strided fetch
+  // a malformed endpoint/credential config fails loudly, not as task
+  // retries deep into the first strided fetch
   override def validate(): Unit = {
     val missing = Seq("httpBaseUrl" -> baseUrl, "realm" -> realm,
       "entity" -> entity, "tokenUrl" -> tokenUrl, "clientId" -> clientId,
@@ -257,8 +234,8 @@ final case class QboHttpFeedConfig(baseUrl: String, realm: String,
         throw new IllegalArgumentException(
           s"qbo http fetch config: $k must be an http(s) URL, got '$u'")
   }
-  override def fetch(idx: Int): Option[String] =
-    Some(api.queryPage(entity, (idx - 1) * QboSource.PageSize + 1))
+  override def fetch(idx: Int): Option[Array[Byte]] =
+    Some(api.queryPageBytes(entity, (idx - 1) * QboSource.PageSize + 1))
 }
 
 /** One entity's scan over the input partitions it was resolved to: a
@@ -325,24 +302,14 @@ class QboScanBuilder(fullSchema: StructType, entity: String,
   }
 }
 
-/** A page already held as a string (fixtures, registry feeds, the page
-  * list [[QboSource.fetchAll]] collected): serialized into the partition.
+/** A page already held as UTF-8 bytes (fixtures, registry feeds,
+  * [[QboSource.fetchAll]]'s pages): serialized into the partition.
   */
-case class QboPagePartition(pageJson: String) extends InputPartition
+case class QboPagePartition(page: Array[Byte]) extends InputPartition
 
-/** Speculative fan-out partition: fetches pages `first, first+stride,
-  * first+2·stride, …` until the feed reports past-the-end.
-  *
-  * Deployment note (VERDICT-r9 item 6): unlike [[QboPagePartition]]
-  * (which serializes the page JSON into the partition), this partition
-  * carries a serialized [[QboPageFetcher]] HANDLE — endpoint + token
-  * config for the HTTP backend ([[QboHttpFeedConfig]]), or the feed
-  * name for the local-mode fixture registry ([[QboRegistryFetcher]]) —
-  * and the fetch happens at read time inside the executor task. With
-  * the HTTP handle the scan is cluster-safe by construction (no
-  * driver-JVM state involved); the registry handle fails fast with a
-  * descriptive error where the registry is absent instead of silently
-  * scanning nothing (ADVICE-r8).
+/** Speculative fan-out partition: its task fetches pages `first,
+  * first+stride, first+2·stride, …` through the serialized
+  * [[QboPageFetcher]] handle until the feed reports past-the-end.
   */
 case class QboStridePartition(first: Int, stride: Int,
     fetcher: QboPageFetcher) extends InputPartition
@@ -411,18 +378,21 @@ class QboReaderFactory(entity: String, schema: StructType,
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     // The one parse of a page: Catalyst's JSON parser over the declared
-    // envelope. Called bare — no FailureSafeParser, so no PERMISSIVE
-    // nulling — it throws on anything the declared schema cannot hold:
-    // FAILFAST, with the page named in the error.
+    // envelope, fed the page's UTF-8 bytes (no String decode). Called
+    // bare — no FailureSafeParser, so no PERMISSIVE nulling — it throws
+    // on anything the declared schema cannot hold: FAILFAST, with the
+    // page named in the error.
     val parser = new JacksonParser(QboSource.envelope(entity, schema),
       new JSONOptions(Map.empty[String, String], "UTC", ""),
       allowArrayAsStructs = false, Nil)
-    def entities(page: String): ArrayData = {
-      val envelope = try
-        parser.parse(page, CreateJacksonParser.string, UTF8String.fromString).headOption
+    def entities(page: Array[Byte]): ArrayData = {
+      val envelope = try parser.parse(page,
+          (f: JsonFactory, b: Array[Byte]) => f.createParser(b), UTF8String.fromBytes)
+        .headOption
       catch {
         case NonFatal(e) => throw new IllegalStateException(
-          s"QBO $entity page failed the declared-schema parse: ${page.take(200)}", e)
+          s"QBO $entity page failed the declared-schema parse: " +
+            new String(page, UTF_8).take(200), e)
       }
       envelope.filterNot(_.isNullAt(0)).map(_.getStruct(0, 1))
         .filterNot(_.isNullAt(0)).map(_.getArray(0))
@@ -432,12 +402,10 @@ class QboReaderFactory(entity: String, schema: StructType,
     // k+stride before the elements of page k are consumed (a live
     // backend's fetch happens right here, inside the executor task)
     val arrays: Iterator[ArrayData] = partition match {
-      case QboPagePartition(json) => Iterator.single(entities(json))
+      case QboPagePartition(page) => Iterator.single(entities(page))
       case QboStridePartition(first, stride, fetcher) =>
-        // fail FAST and descriptively on a misconfigured fetcher at
-        // reader creation (ADVICE-r8) — e.g. the registry handle in a
-        // JVM whose registry was never populated — never a silent
-        // 0-row scan or a lazy mid-read throw
+        // a misconfigured fetcher (say, an unpopulated registry) fails
+        // here, never as a silent 0-row scan or a lazy mid-read throw
         fetcher.validate()
         // an empty or absent entity array is past-the-end
         Iterator.iterate(first)(_ + stride)

@@ -271,6 +271,63 @@ class QboDataSourceSpec extends SparkSpec {
     } finally server.stop(0)
   }
 
+  test("pages reach the parser as UTF-8 bytes: multi-byte and " +
+      "supplementary text reads back exactly over the serialized HTTP " +
+      "handle and a registry feed; a malformed page still fails loudly") {
+    import java.net.InetSocketAddress
+    import com.sun.net.httpserver.{HttpExchange, HttpServer}
+    val note = "naïve – 東京 😀"
+    val good = s"""{"QueryResponse":{"Deposit":[
+      {"Id":"1","TotalAmt":1.0,"TxnDate":"2024-06-01","PrivateNote":"$note"}]}}"""
+    // type drift (TotalAmt an object) after 200+ characters of
+    // multi-byte text: the error names the page's first 200 characters
+    val bad = """{"QueryResponse":{"Deposit":[{"Id":"2","PrivateNote":"""" +
+      "東京😀" * 60 + """","TotalAmt":{"amount":5.0}}]}}"""
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    def serve(realm: String, page: String): Unit =
+      server.createContext(s"/v3/company/$realm/query", (ex: HttpExchange) => {
+        val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
+        val bytes = (if (body.contains("STARTPOSITION 1 ")) page
+          else """{"QueryResponse":{}}""").getBytes("UTF-8")
+        ex.sendResponseHeaders(200, bytes.length)
+        ex.getResponseBody.write(bytes)
+        ex.close()
+      })
+    server.createContext("/oauth/token", (ex: HttpExchange) => {
+      val bytes = """{"access_token":"t"}""".getBytes("UTF-8")
+      ex.sendResponseHeaders(200, bytes.length)
+      ex.getResponseBody.write(bytes)
+      ex.close()
+    })
+    serve("good", good)
+    serve("bad", bad)
+    server.start()
+    try {
+      val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+      def http(realm: String) = spark.read.format("qbo")
+        .option("entity", "Deposit")
+        .option("httpBaseUrl", base).option("realm", realm)
+        .option("tokenUrl", s"$base/oauth/token")
+        .option("clientId", "cid").option("clientSecret", "sec")
+        .option("refreshToken", "rt0")
+        .option("fetchPartitions", "2")
+        .load()
+      def notes(df: org.apache.spark.sql.DataFrame) =
+        df.select("PrivateNote").collect().map(_.getString(0)).toSeq
+      assert(notes(http("good")) == Seq(note))
+      QboPageFeeds.register("utf8_deposits", Seq(good))
+      assert(notes(spark.read.format("qbo").option("entity", "Deposit")
+        .option("feed", "utf8_deposits").load()) == Seq(note))
+      val e = intercept[Throwable](http("bad").collect())
+      val msg = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .map(c => Option(c.getMessage).getOrElse("")).mkString(" | ")
+      assert(bad.length > 200)
+      assert(msg.contains("QBO Deposit page failed the declared-schema parse: " +
+        bad.take(200)), msg)
+      assert(!msg.contains(bad.take(201)), msg)
+    } finally server.stop(0)
+  }
+
   test("misconfigured HTTP fetch config fails LOUDLY at planning — " +
       "the validate() contract the registry fetcher already honored " +
       "(review-r10): no task ever launches, no retry noise") {

@@ -89,4 +89,22 @@ class DrainSpec extends SparkSpec {
       .toSeq == Seq(1L, 2L, 3L))
     assertTornDown(dir, parts)
   }
+
+  test("scratch dirs of exited JVMs are swept; a live JVM's dirs stay") {
+    // a pid that has certainly exited: a child we started and reaped
+    val child = new ProcessBuilder("true").start()
+    child.waitFor()
+    val deadPid = child.pid()
+    assert(ProcessHandle.of(deadPid).isEmpty)
+    val root = Paths.get(Common.scratchRoot)
+    val dead = Files.createDirectories(root.resolve(s"graft_drainspec_ab12_p$deadPid"))
+    Files.write(dead.resolve("leftover"), Array[Byte](1, 2, 3))
+    val live = Files.createDirectories(
+      root.resolve(s"graft_drainspec_ab12_p${ProcessHandle.current().pid()}"))
+    try {
+      Common.sweepDeadScratch()
+      assert(!Files.exists(dead), s"$dead survived the sweep")
+      assert(Files.isDirectory(live), s"$live of this live JVM was deleted")
+    } finally Files.deleteIfExists(live)
+  }
 }

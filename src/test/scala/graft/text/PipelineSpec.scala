@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.queries.{Common, Pipeline}
+import graft.queries.Pipeline
 
 /** Property tests for the training-pipeline curation operators (q92-q99)
   * — semantic invariants the oracle hash-compare can't express.
@@ -26,7 +26,7 @@ class PipelineSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val sh = docs.select(col("doc_id"),
       explode(TextFunctions.shingleSet(col("text"))).as("s"))
-      .select(col("doc_id"), Common.hash32(col("s")).as("h"))
+      .select(col("doc_id"), graft.ops.Hashing.hash32(col("s")).as("h"))
     val train = sh.filter(col("doc_id") % 10 =!= 0).select("h").distinct()
       .withColumn("hit", lit(1))
     val got = sh.filter(col("doc_id") % 10 === 0)
@@ -59,7 +59,7 @@ class PipelineSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val labels = graft.dedup.Dedup.dupClusters(
       graft.dedup.Dedup.lshCandidatePairs(docs, "doc_id", "text"))
-    val h = Common.hash32(concat(lit("split:"),
+    val h = graft.ops.Hashing.hash32(concat(lit("split:"),
       col("cluster_id").cast("string"))) % 100
     val perCluster = labels
       .withColumn("split",
@@ -168,7 +168,7 @@ class PipelineSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val hs = transform(
       sequence(lit(1), size(col("ws")) - 7),
-      i => Common.hash32(concat_ws(" ", slice(col("ws"), i, lit(8)))))
+      i => graft.ops.Hashing.hash32(concat_ws(" ", slice(col("ws"), i, lit(8)))))
     val r = planted.select(col("doc_id"), split(col("text"), "\\s+").as("ws"))
       .select(size(col("ws")).as("n"),
         size(array_distinct(hs)).as("nd"))
