@@ -68,8 +68,8 @@ object Dedup {
   def bandValues(sig: Seq[Column]): Seq[Column] =
     sig.grouped(2).map(pair => pair.head * P + pair(1)).toSeq
 
-  /** (id, h0..h(n-1)) signature frame via the custom Catalyst expression
-    * (graft.functions.MinHashSignatureExpr) — one imperative pass per
+  /** (id, h0..h(n-1)) signature frame via `graft_minhash_signature`
+    * (kernel `ExprHelpers.minhash`) — one imperative pass per
     * document instead of ~600 interpreted lambda evals. The
     * `repartition(id)` is a projection barrier: without it,
     * CollapseProject inlines the signature into all n element_at
@@ -150,7 +150,7 @@ object Dedup {
     */
   def shingleFrame(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3): DataFrame = {
-    require(k == 3, "ShingleSetExpr is registered for k = 3")
+    require(k == 3, "graft_shingles is registered for k = 3")
     df.select(col(idCol), graft.functions.GraftFunctions
         .shingles(df.sparkSession, col(textCol)).as("sh"))
       .repartition(col(idCol))
@@ -158,7 +158,7 @@ object Dedup {
 
   /** MinHash-LSH candidate pairs from a pre-built [[shingleFrame]].
     * Band values come from one imperative expression pass over the
-    * shingle array ([[graft.functions.MinHashBandsExpr]], bit-identical
+    * shingle array (`graft_minhash_bands`, bit-identical
     * to banding [[signatureFrame]] — asserted in DedupSpec), evaluated
     * once per row inside the Generate. Same merge-hinted self-join as
     * [[lshCandidatePairs]] so the band exchange is reused across sides.
@@ -635,7 +635,7 @@ object Dedup {
     require(tNum > 0 && tDen > 0 && tNum <= tDen, "threshold must be in (0, 1]")
     val sized = setSimilaritySized(df, idCol, textCol)
     val cand = setSimilarityCandidates(sized, tNum, tDen)
-    // one-pass imperative |A∩B|/|A∪B| (InterUnionExpr) — the built-in
+    // one-pass imperative |A∩B|/|A∪B| (graft_inter_union) — the built-in
     // array_intersect + array_union pair walks both arrays twice and
     // builds four hash tables per candidate; same distinct-count
     // semantics, exact integers (r16: q106 verify 9.4 → 5.9 s solo)

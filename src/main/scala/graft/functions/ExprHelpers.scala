@@ -7,28 +7,62 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.ops.Hashing
 
-/** Static eval bodies for graft's custom expressions — one source of
-  * truth shared by the interpreted path (`nullSafeEval`) and the
-  * generated path (`doGenCode` emits a call to these; Scala objects
-  * compile to static forwarders, so janino resolves
-  * `graft.functions.ExprHelpers.minhash(...)` directly).
+/** The kernels behind graft's scalar `graft_*` functions. Each
+  * [[GraftFunctions.specs]] row names one of these methods, and
+  * [[GraftCall]] replaces the call with Spark's `StaticInvoke`, so the
+  * interpreted path calls it by reflection and the generated path emits
+  * `graft.functions.ExprHelpers.<kernel>(...)` (Scala objects compile
+  * to static forwarders) inside the surrounding WholeStageCodegen span.
+  * A NULL argument never reaches a kernel: the call yields NULL.
+  *
+  * Why kernels at all: each one replaces a higher-order-function chain
+  * whose `transform`/`filter`/`aggregate` lambdas run through the
+  * interpreted evaluator once per ELEMENT; a kernel runs once per ROW
+  * as a JIT-compiled loop. Each is bit-identical to the chain it
+  * replaces on non-NULL input, and the DuckDB oracle SQL is the
+  * untouched chain, so the cross-engine hash checks prove the
+  * equivalences on every corpus. Where the chain answered a NULL input
+  * with a value (`TextFunctions.fingerprint` gave 0, `langIdHeuristic`
+  * gave "und"), `graft_fingerprint` and `graft_lang_id` give NULL.
+  *
+  * Parameters that have one value in use are constants here, not
+  * arguments: a literal argument would rename every unaliased output
+  * column, and `StaticInvoke` cannot carry an `int[]`.
   */
 object ExprHelpers {
 
-  /** T120 canonicalization for [[CanonicalUrlExpr]]; null = rejected. */
+  /** Shingle width (words) of `graft_shingles`, `graft_explode_shingles`
+    * and `graft_minhash_signature`.
+    */
+  private val ShingleK = 3
+
+  /** Hashed-feature width of `graft_hashed_buckets`/`graft_hashed_score`
+    * (every T42/DSIR consumer).
+    */
+  private val FeatureBuckets = 1024
+
+  /** T120 canonicalization for `graft_canonical_url`; null = rejected
+    * (non-hierarchical or malformed URLs: mailto:, data:, bad ports).
+    * The frontier kernels call the [[graft.text.Urls]] /
+    * [[graft.text.PublicSuffix]] / [[graft.text.Robots]] modules the
+    * Scala API uses, so SQL and Scala users get the same semantics.
+    */
   def canonicalUrl(u: UTF8String): UTF8String =
     graft.text.Urls.canonicalize(u.toString)
       .map(UTF8String.fromString).orNull
 
-  /** T130 eTLD+1 for [[RegistrableDomainExpr]]; null = no registrable
+  /** T130 eTLD+1 for `graft_registrable_domain`; null = no registrable
     * domain (IP literal, single label, host IS a suffix).
     */
   def registrableDomain(h: UTF8String): UTF8String =
     graft.text.PublicSuffix.registrableDomain(h.toString)
       .map(UTF8String.fromString).orNull
 
-  /** T121 verdict for [[RobotsAllowedExpr]] (per-row parse — the SQL
-    * ad-hoc tier; production pre-parses per host, Crawl.hostRobots).
+  /** T121 verdict for `graft_robots_allowed` (RFC 9309 agent selection,
+    * longest match wins). Declared trade: it parses its robots.txt per
+    * ROW. The production frontier parses once per HOST into the rules
+    * dimension (`Crawl.hostRobots`) and broadcast-joins the verdict;
+    * this is the composable per-row form for ad-hoc SQL.
     */
   def robotsAllowed(robots: UTF8String, agent: UTF8String,
       path: UTF8String): Boolean =
@@ -55,17 +89,28 @@ object ExprHelpers {
     */
   private def h32u(md: MessageDigest, s: UTF8String): Long = h32(md, s.getBytes)
 
-  /** Elementwise md5-prefix hash32 of a string array in one pass (see
-    * [[Hash32ArrayExpr]]). Modes replicate the exact HOF compositions
-    * they replace (null elements hash to null, like `hash32(null)`):
-    *  - 1: `array_distinct(transform(arr, hash32))` — distinct,
-    *       first-occurrence order (one null kept at its first slot);
-    *  - 2: `array_sort(transform(arr, hash32))` — ascending, duplicate
-    *       hashes kept, nulls last;
-    *  - 3: `array_sort(array_distinct(transform(arr, hash32)))` —
-    *       ascending distinct, one null last.
+  /** `graft_hash32_distinct`: `array_distinct(transform(arr, hash32))`
+    * — distinct, first-occurrence order (one null kept at its first
+    * slot). The chain ran one interpreted md5 lambda per element.
     */
-  def hash32Array(arr: ArrayData, mode: Int): ArrayData = {
+  def hash32Distinct(arr: ArrayData): ArrayData = hash32Array(arr, 1)
+
+  /** `graft_hash32_sorted`: `array_sort(transform(arr, hash32))` —
+    * ascending, duplicate hashes kept, nulls last.
+    */
+  def hash32Sorted(arr: ArrayData): ArrayData = hash32Array(arr, 2)
+
+  /** `graft_hash32_sorted_distinct`:
+    * `array_sort(array_distinct(transform(arr, hash32)))` — ascending
+    * distinct, one null last.
+    */
+  def hash32SortedDistinct(arr: ArrayData): ArrayData = hash32Array(arr, 3)
+
+  /** Elementwise md5-prefix hash32 of a string array in one pass; null
+    * elements hash to null, like `hash32(null)`. `mode` picks the chain
+    * replicated (1 distinct, 2 sorted, 3 sorted distinct).
+    */
+  private def hash32Array(arr: ArrayData, mode: Int): ArrayData = {
     val md = mdPool.get()
     val n = arr.numElements()
     mode match {
@@ -120,7 +165,17 @@ object ExprHelpers {
     }
   }
 
-  def minhash(text: UTF8String, shingleK: Int, numHashes: Int): ArrayData = {
+  /** `graft_minhash_signature`: text → word shingles → md5-derived
+    * hash32 → one affine minimum per [[Hashing.HashA]] member →
+    * array<long> (all-NULL below [[ShingleK]] words). The HOF chain in
+    * [[graft.dedup.Dedup]] is semantically identical but evaluates one
+    * interpreted lambda per array element — measured ~4 s for 5k docs
+    * at sf0.1 (~3M lambda invocations). Bit-identical to it and to the
+    * DuckDB oracle SQL (DedupSpec).
+    */
+  def minhash(text: UTF8String): ArrayData = {
+    val shingleK = ShingleK
+    val numHashes = Hashing.HashA.length
     val words = text.toString.split("\\s+", -1)
     if (words.length < shingleK) {
       return new GenericArrayData(Array.fill[Any](numHashes)(null))
@@ -149,8 +204,9 @@ object ExprHelpers {
     new GenericArrayData(mins.map(Long.box(_): Any))
   }
 
-  /** LSH band values (r=2 rows/band) straight from an already-computed
-    * shingle array: minhash mins then band_j = h(2j)*P + h(2j+1). One
+  /** `graft_minhash_bands`: LSH band values (r=2 rows/band) straight
+    * from an already-computed shingle array: minhash mins then
+    * band_j = h(2j)*P + h(2j+1). One
     * imperative pass per row — lets a query that also needs the shingles
     * downstream (candidate-gated exact scoring) share ONE shingle frame
     * between banding and scoring instead of recomputing the text→shingle
@@ -160,7 +216,8 @@ object ExprHelpers {
     * element is skipped, as `array_min` skips a NULL hash; an array of
     * only NULLs counts as empty.
     */
-  def minhashBands(arr: ArrayData, numHashes: Int): ArrayData = {
+  def minhashBands(arr: ArrayData): ArrayData = {
+    val numHashes = Hashing.HashA.length
     val nBands = numHashes / 2
     val md = mdPool.get()
     val mins = Array.fill(numHashes)(Long.MaxValue)
@@ -189,11 +246,18 @@ object ExprHelpers {
     new GenericArrayData(bands)
   }
 
-  /** Distinct k-word shingles, first-occurrence order (== the HOF chain
-    * array_distinct ∘ transform: both keep the first occurrence).
-    * Empty array when the document has fewer than k tokens.
+  /** `graft_shingles`: distinct [[ShingleK]]-word shingles, text →
+    * whitespace split → k-grams joined with one space, first-occurrence
+    * order. Identical to the HOF chain in
+    * [[graft.text.TextFunctions.shingleSet]]
+    * (`array_distinct(transform(sequence(...), concat_ws(slice(...))))`),
+    * which evaluates ~4 interpreted lambdas per shingle (TextSpec). It
+    * feeds every candidate-gated dedup pipeline (q32, q87), where
+    * shingling was the dominant per-row cost. Empty array when the
+    * document has fewer than k tokens.
     */
-  def shingleSet(text: UTF8String, shingleK: Int): ArrayData = {
+  def shingleSet(text: UTF8String): ArrayData = {
+    val shingleK = ShingleK
     val words = text.toString.split("\\s+", -1)
     if (words.length < shingleK) {
       return new GenericArrayData(Array.empty[Any])
@@ -215,21 +279,37 @@ object ExprHelpers {
     new GenericArrayData(seen.toArray(Array.empty[AnyRef]).asInstanceOf[Array[Any]])
   }
 
-  /** Hashed char-3-gram histogram in one code-point pass (see
-    * [[NGramHistExpr]]): per position i, bucket
-    * ((c_i·31 + c_{i+1})·31 + c_{i+2}) mod prime mod buckets over the
-    * document's code points; returns (b, nb) structs sorted by bucket.
-    * Fewer than 3 code points → empty array.
+  /** `graft_ngram_hist`: hashed char-3-gram histogram in one code-point
+    * pass — per position i, bucket ((c_i·31 + c_{i+1})·31 + c_{i+2})
+    * mod P mod B (B = `Curation5.NGramB`) over the document's code
+    * points; returns (b, nb) structs sorted by bucket. Fewer than 3
+    * code points → empty array.
+    *
+    * It replaces the T182/T189 chain `transform(sequence(...),
+    * ascii(substr(text, i, 1)))` → 3-gram transform → explode →
+    * groupBy(b).count, with the same integer hash over the same code
+    * points (DuckDB's `ascii(substr(text, i, 1))` is the code point of
+    * character i), so the oracle twin is untouched. `substr` on a
+    * UTF8String is an O(i) scan, which made the chain O(len²) per
+    * document (~440M character scans per query at sf0.1), and its
+    * explode shuffled corpus-sized gram rows that this pre-aggregates
+    * inside the scan task.
+    *
+    * The accumulator is a reused thread-local long[B] with a
+    * touched-bucket list: zeroing only touched slots keeps the per-row
+    * cost proportional to the document, not to B.
     */
-  def ngramHist(text: UTF8String, buckets: Int, prime: Long): ArrayData = {
+  def ngramHist(text: UTF8String): ArrayData = {
+    val buckets = graft.queries.Curation5.NGramB
+    val prime = Hashing.P
     val s = text.toString
-    var acc = NGramHistState.acc.get()
-    if (acc == null || acc.length < buckets) {
+    var acc = ngramAcc.get()
+    if (acc == null) {
       acc = new Array[Long](buckets)
-      NGramHistState.acc.set(acc)
-      NGramHistState.touched.set(new Array[Int](buckets))
+      ngramAcc.set(acc)
+      ngramTouched.set(new Array[Int](buckets))
     }
-    val touched = NGramHistState.touched.get()
+    val touched = ngramTouched.get()
     var nTouched = 0
     try {
       // rolling window of the last three code points
@@ -271,11 +351,16 @@ object ExprHelpers {
     }
   }
 
+  // one accumulator per task thread for [[ngramHist]], sized at first use
+  private val ngramAcc = new ThreadLocal[Array[Long]]
+  private val ngramTouched = new ThreadLocal[Array[Int]]
+
   /** Streaming variant of [[shingleSet]] for the Generator path: yields
     * each first-occurrence distinct shingle as it is found instead of
     * materializing the array. Same order, same elements.
     */
-  def shingleIterator(text: UTF8String, shingleK: Int): Iterator[UTF8String] = {
+  def shingleIterator(text: UTF8String): Iterator[UTF8String] = {
+    val shingleK = ShingleK
     val words = text.toString.split("\\s+", -1)
     if (words.length < shingleK) return Iterator.empty
     val seen = new java.util.HashSet[UTF8String]
@@ -293,6 +378,12 @@ object ExprHelpers {
     }
   }
 
+  /** `graft_simhash`: 32-bit SimHash in one pass (text → tokens →
+    * md5-hash32 per token → per-bit vote → digest). Bit-identical to
+    * [[graft.dedup.Dedup.simhash32]], whose HOF form pays ~32×tokens
+    * interpreted lambda evals per row, and to the DuckDB oracle
+    * (DedupSpec).
+    */
   def simhash(text: UTF8String): Long = {
     val words = text.toString.split("\\s+", -1)
     val md = mdPool.get()
@@ -310,7 +401,14 @@ object ExprHelpers {
     sim
   }
 
-  def lshBucket(arr: ArrayData, nPlanes: Int): Long = {
+  /** `graft_lsh_bucket`: sign-pattern LSH bucket of a 64-dim double
+    * vector over 8 LCG-derived hyperplanes — the imperative twin of
+    * [[graft.similarity.Vectors.lshBucket]], which pays ~8×64
+    * interpreted lambda evals per row. Bit-identical coefficients and
+    * fold order (DedupSpec, VectorsSpec).
+    */
+  def lshBucket(arr: ArrayData): Long = {
+    val nPlanes = 8
     val v = arr.toDoubleArray()
     var bucket = 0L
     var p = 0
@@ -328,9 +426,14 @@ object ExprHelpers {
     bucket
   }
 
-  /** Distinct-element |A∩B| and |A∪B| in one pass (string elements);
-    * null elements count as one distinct value each side, matching
-    * array_intersect/array_union set semantics.
+  /** `graft_inter_union` over two array<string>: distinct-element
+    * |A∩B| and |A∪B| in one pass, struct(inter, uni) — the exact
+    * integer pair the PPJoin-family verifies cross-multiply against the
+    * threshold. Null elements count as one distinct value each side,
+    * matching `size(array_intersect)`/`size(array_union)`; that
+    * composition walks both arrays twice through generic per-element
+    * dispatch and builds four hash tables, this builds two (q106's
+    * 310k-candidate verify at sf0.1: 9.4 → 5.9 s).
     */
   def interUnionStr(l: ArrayData, r: ArrayData)
       : org.apache.spark.sql.catalyst.expressions.GenericInternalRow = {
@@ -361,7 +464,9 @@ object ExprHelpers {
       Array[Any](inter, union))
   }
 
-  /** [[interUnionStr]] for long elements. */
+  /** [[interUnionStr]] for two array<bigint> (hashed shingles, minhash
+    * lattices); the spec row picks the kernel by element type.
+    */
   def interUnionLong(l: ArrayData, r: ArrayData)
       : org.apache.spark.sql.catalyst.expressions.GenericInternalRow = {
     val setA = new java.util.HashSet[java.lang.Long](l.numElements() * 2)
@@ -391,11 +496,20 @@ object ExprHelpers {
       Array[Any](inter, union))
   }
 
-  /** Winnowing fingerprints in one pass (see [[WinnowFpExpr]]): 3-word
-    * shingle hash32s → sliding-window-of-`w` minima → first-occurrence
-    * distinct. Empty when the doc has < 3 words or < w shingles.
+  /** `graft_winnow_fp`: winnowing fingerprints (T112, the MOSS scheme)
+    * in one pass — whitespace words → positional 3-word shingle hash32s
+    * → sliding windows of 4 → each window's minimum → first-occurrence
+    * distinct. Identical to the HOF chain it replaced in
+    * `Curation4.winnowExplode` (same Java regex `\s+` split keeping a
+    * leading empty token, same md5-prefix hash as the SQL
+    * `conv(substring(md5(..),1,8),16,10)`, same window minima and
+    * order), which evaluated ~300 interpreted lambdas (one md5 each)
+    * plus ~290 slice allocations per document. Empty when the doc has
+    * < 3 words or < 4 shingles (the explode drops it, like the old
+    * pre-filters).
     */
-  def winnowFp(text: UTF8String, w: Int): ArrayData = {
+  def winnowFp(text: UTF8String): ArrayData = {
+    val w = 4
     val words = text.toString.split("\\s+", -1)
     val nSh = words.length - 2
     if (nSh < w) return new GenericArrayData(Array.empty[Any])
@@ -426,8 +540,12 @@ object ExprHelpers {
       seen.toArray(Array.empty[AnyRef]).asInstanceOf[Array[Any]])
   }
 
-  /** True iff two ascending integer lists hold a pair within `d`
-    * (two-pointer; see [[PosCloseExpr]]). The two-pointer walk is only
+  /** `graft_pos_close`: true iff two ascending integer position lists
+    * hold a pair within `d` — the Ed-Join location-based filter's join
+    * predicate, evaluated once per gram-equal candidate pair. The HOF
+    * form `exists(a, pa -> exists(b, pb -> abs(pa-pb) <= d))` ran two
+    * interpreted lambdas per element pair; this is a two-pointer walk,
+    * O(|a|+|b|). The two-pointer walk is only
     * correct for ascending lists (the production builders emit them
     * sorted by construction); because graft_pos_close is also exposed
     * as a general SQL function, a descending step detected during the
@@ -476,7 +594,12 @@ object ExprHelpers {
     false
   }
 
-  /** Jaccard over distinct elements; 0.0 when both sides are empty. */
+  /** `graft_jaccard`: Jaccard similarity over distinct elements in one
+    * hash-set pass — the twin of `size(array_intersect)/size(array_union)`
+    * ([[graft.dedup.Dedup.jaccard]]), bit-identical to it and the DuckDB
+    * oracle. Documented deviation: empty ∪ empty yields 0.0 here, where
+    * the ANSI division would error.
+    */
   def jaccard(l: ArrayData, r: ArrayData): Double = {
     val setA = new java.util.HashSet[UTF8String](l.numElements() * 2)
     var i = 0
@@ -493,7 +616,12 @@ object ExprHelpers {
     if (union == 0) 0.0 else inter.toDouble / union
   }
 
-  /** Nearest-seed argmin: one imperative pass over the (sorted) seed
+  /** `graft_nearest_seed`: nearest-seed (squared-L2 argmin) cluster
+    * assignment of a vector against a codebook, the kernel of
+    * q114/q115/q120. The spec row types it (array<double>,
+    * array<struct<bigint, array<double>>>) at analysis time, so an
+    * array<float> vector cannot make `getDouble` read wrong bytes; the
+    * struct field names are free. One imperative pass over the (sorted) seed
     * array, strict `<` keeping the earlier (smaller-sid) seed on ties —
     * bit-identical to the HOF composition (aggregate over sqDist
     * zip_with folds, same add order) but without the per-step struct
@@ -548,8 +676,10 @@ object ExprHelpers {
   }
   private val langIdUnd = UTF8String.fromString("und")
 
-  /** Stopword-profile language ID in one tokenization pass (see
-    * [[LangIdExpr]]): ws = split(lower(text), "\\s+") (Java regex,
+  /** `graft_lang_id`: stopword-profile language ID (the q40/q177
+    * heuristic) in one tokenization pass, replacing four interpreted
+    * `filter(ws, isin(...))` walks plus an array_max over scoring
+    * structs per document: ws = split(lower(text), "\\s+") (Java regex,
     * limit -1 — the Spark `split` semantics), score per language =
     * stopword OCCURRENCE count (not distinct), winner = max by
     * (score, code) — the exact struct-array_max tiebreak of the HOF
@@ -591,8 +721,10 @@ object ExprHelpers {
     else langIdLangs(best)
   }
 
-  /** Content-defined chunk digests in one pass (see [[CdcChunksExpr]]):
-    * words (Java regex `\\s+` split, limit -1) → per-word hash32 →
+  /** `graft_cdc_chunks`: content-defined chunk digests (q202's
+    * FastCDC-style word chunker) in one pass, replacing a per-word hash
+    * transform + boundary filter + per-chunk slice/concat/md5 transform
+    * chain: words (Java regex `\\s+` split, limit -1) → per-word hash32 →
     * boundaries where the 4-word Karp-Rabin polynomial ≡ 0 (mod 8) →
     * md5 hex digest of each space-joined chunk. Bit-identical to the
     * HOF chain q202 ran before it (boundaries at 1-based
@@ -652,15 +784,15 @@ object ExprHelpers {
     new String(cs)
   }
 
-  /** Rolling polynomial fingerprint fold over a string's code points:
-    * fold((acc·31 + cp) mod P) from 0 — exactly
+  /** `graft_fingerprint`: rolling polynomial fold over a string's code
+    * points, fold((acc·31 + cp) mod P) from 0 — exactly
     * `aggregate(sequence(1, length(c)), 0L, (acc, i) -> (acc*31 +
     * ascii(substr(c, i, 1))) % P)` (Spark's length/substr/ascii walk
     * code points), whose HOF form is O(len²) per string because
     * substr(c, i, 1) is an O(i) scan. Empty string → 0, matching the
     * `when(length > 0, ...).otherwise(0)` guard in the HOF builder.
     * The guard also maps NULL to 0, but a NULL never reaches this
-    * function: [[FingerprintExpr]] returns NULL for it.
+    * function: `graft_fingerprint(NULL)` is NULL.
     */
   def fingerprint(text: UTF8String): Long = {
     val s = text.toString
@@ -674,12 +806,15 @@ object ExprHelpers {
     acc
   }
 
-  /** Hashed-feature buckets, one per whitespace token (fastText-style;
-    * see [[HashedBucketsExpr]]): bucket = [[fingerprint]](token) mod
-    * `buckets`. Order-preserving, empty tokens bucket 0 — identical to
-    * `transform(split(text, "\\s+"), w -> fingerprint(w) % buckets)`.
+  /** `graft_hashed_buckets`: hashed-feature buckets, one per whitespace
+    * token (fastText-style, the T42/DSIR feature map): bucket =
+    * [[fingerprint]](token) mod 1024. Order-preserving, empty tokens
+    * bucket 0 — identical to
+    * `transform(split(text, "\\s+"), w -> fingerprint(w) % 1024)`
+    * without its per-token interpreted folds.
     */
-  def hashedBuckets(text: UTF8String, buckets: Int): ArrayData = {
+  def hashedBuckets(text: UTF8String): ArrayData = {
+    val buckets = FeatureBuckets
     val words = text.toString.split("\\s+", -1)
     val out = new Array[Any](words.length)
     var i = 0
@@ -691,12 +826,14 @@ object ExprHelpers {
     new GenericArrayData(out)
   }
 
-  /** Closed-form linear score over [[hashedBuckets]] without the
-    * intermediate array: Σ (bucket mod 201 − 100) — identical to
+  /** `graft_hashed_score`: closed-form linear score over
+    * [[hashedBuckets]] without the intermediate array:
+    * Σ (bucket mod 201 − 100) — identical to
     * `aggregate(hashedBuckets(..), 0L, (acc, b) -> acc + (b % 201 -
     * 100))` (the T42 quality score).
     */
-  def hashedScore(text: UTF8String, buckets: Int): Long = {
+  def hashedScore(text: UTF8String): Long = {
+    val buckets = FeatureBuckets
     val words = text.toString.split("\\s+", -1)
     var score = 0L
     var i = 0
@@ -718,8 +855,11 @@ object ExprHelpers {
     acc
   }
 
-  /** Multiscale rolling window hashes (q271's generator; see
-    * [[MultiscaleWindowsExpr]]): per token one md5-prefix hash32, then
+  /** `graft_multiscale_windows`: multiscale rolling window hashes
+    * (q271's 4-tier generator) as array<struct<tier, i, wh>>, over the
+    * tiers `Curation5.Tiers` with base `Curation5.RollB`. The
+    * typed-Dataset flatMap it replaced paid Seq[String]
+    * deserialization + per-window tuple re-encoding for every row. Per token one md5-prefix hash32, then
     * for each tier length l every window's polynomial hash by O(1)
     * rolling update — h_1 = fold((h·B + hs_j) mod P) over the first l
     * tokens, h_{i+1} = ((h_i + P − hs_{i−l}·B^{l−1} mod P) mod P · B +
@@ -730,8 +870,9 @@ object ExprHelpers {
     * token has no hash, so no window over it is emitted; windows clear
     * of it keep their positions and hashes.
     */
-  def multiscaleWindows(ws: ArrayData, tiers: Array[Int], rollB: Long)
-      : ArrayData = {
+  def multiscaleWindows(ws: ArrayData): ArrayData = {
+    val tiers = windowTiers
+    val rollB = graft.queries.Curation5.RollB
     val P = Hashing.P
     val n = ws.numElements()
     val md = mdPool.get()
@@ -787,8 +928,12 @@ object ExprHelpers {
     new GenericArrayData(if (o == total) out else out.take(o))
   }
 
-  /** Multiscale coverage statistics in one pass (see
-    * [[CoverageStatsExpr]]; q271's span algebra). Inputs: the four
+  private lazy val windowTiers = graft.queries.Curation5.Tiers.toArray
+
+  /** `graft_coverage_stats`: multiscale coverage statistics (q271's span
+    * algebra) in one pass, replacing a chain of interpreted
+    * array_sort/array_distinct/array_except/filter-with-array_contains
+    * HOFs, the last of which was O(|u|²) per document. Inputs: the four
     * per-tier covered-position arrays (each already distinct by
     * construction; treated set-wise exactly like the HOF forms).
     * Returns struct(covered, t64, t32, t16, t8, n_spans,
@@ -861,10 +1006,13 @@ object ExprHelpers {
       Array[Any](u.length.toLong, t64, t32, t16, t8, nSpans, longest))
   }
 
-  /** Unicode NFC canonicalization (combining sequences composed — the
-    * pre-hash normalization step; DuckDB twin: `nfc_normalize`). Fast
-    * path: `isNormalized` is a cheap scan and true for virtually all
-    * real text, so the common case allocates nothing.
+  /** `graft_nfc`: Unicode NFC canonicalization — the curation step that
+    * must precede any hash-based dedup on multilingual text ("Café" with
+    * a precomposed é and with e+U+0301 are one document to a reader but
+    * different bytes to every digest). Spark has no built-in
+    * normalizer. DuckDB twin: `nfc_normalize` (q123). Fast path:
+    * `isNormalized` is a cheap scan and true for virtually all real
+    * text, so the common case allocates nothing.
     */
   def nfc(s: UTF8String): UTF8String = {
     val str = s.toString
@@ -873,8 +1021,9 @@ object ExprHelpers {
       java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
   }
 
-  /** Sequential-fold dot product of two double arrays — the imperative
-    * twin of `aggregate(zip_with(a, b, _*_), 0.0, _+_)`
+  /** `graft_dot`: sequential-fold dot product of two double arrays —
+    * the codegen'd kernel of the similarity family's pair scoring (T191
+    * scores ~1.9M 64-dim pairs) and the imperative twin of `aggregate(zip_with(a, b, _*_), 0.0, _+_)`
     * ([[graft.similarity.Vectors.dot]]): IDENTICAL fold order, so the
     * accumulated IEEE double is bit-for-bit the HOF's (and the DuckDB
     * list_reduce oracle's) at every input. Null on length mismatch or

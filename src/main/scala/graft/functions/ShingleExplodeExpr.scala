@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Custom Catalyst Generator (the Spark UDTF surface): one output row
-  * per DISTINCT k-word shingle of a document, streamed as an iterator.
+  * per DISTINCT 3-word shingle of a document, streamed as an iterator.
   *
   * `explode(shingleSet(text))` first materializes the full shingle
   * array per row and then generates from it; this generator yields
@@ -20,9 +20,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Generators have no expression codegen path (GenerateExec drives the
   * iterator directly), hence CodegenFallback — the cost sits in the
-  * same imperative helper loop as [[ShingleSetExpr]] either way.
+  * same imperative kernel loop as `graft_shingles` either way.
   */
-case class ShingleExplodeExpr(child: Expression, shingleK: Int)
+case class ShingleExplodeExpr(child: Expression)
     extends UnaryExpression with Generator with CodegenFallback {
 
   override def elementSchema: StructType =
@@ -36,7 +36,7 @@ case class ShingleExplodeExpr(child: Expression, shingleK: Int)
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val t = child.eval(input)
     if (t == null) Iterator.empty
-    else ExprHelpers.shingleIterator(t.asInstanceOf[UTF8String], shingleK)
+    else ExprHelpers.shingleIterator(t.asInstanceOf[UTF8String])
       .map(s => InternalRow(s))
   }
 }

@@ -159,7 +159,10 @@ object Reports {
 
     def parse(spark: SparkSession, reportJson: String): DataFrame = {
       import spark.implicits._
-      val report = spark.read.schema(schema).json(spark.createDataset(Seq(reportJson)))
+      // FAILFAST: a truncated or drifted report must raise, not parse to
+      // 0 rows that a full refresh would then load over the table
+      val report = spark.read.schema(schema).option("mode", "FAILFAST")
+        .json(spark.createDataset(Seq(reportJson)))
       val rows = report.select(
         col("Header.StartPeriod").as("start_period"),
         col("Header.EndPeriod").as("end_period"),
@@ -204,7 +207,8 @@ object Reports {
       */
     def parsePages(spark: SparkSession, reportJsons: Seq[String]): DataFrame = {
       import spark.implicits._
-      val report = spark.read.schema(schema).json(spark.createDataset(reportJsons))
+      val report = spark.read.schema(schema).option("mode", "FAILFAST")
+        .json(spark.createDataset(reportJsons))
       val vendors = report.select(
         col("Header.Time").as("report_time"),
         col("Header.StartPeriod").as("start_period"),

@@ -192,7 +192,7 @@ object Audit {
         val allCand = lsh.withColumn("in_lsh", lit(true))
           .union(overlapCand.withColumn("in_lsh", lit(false)))
           .groupBy("a_id", "b_id").agg(max(col("in_lsh")).as("in_lsh"))
-        // one-pass |A∩B|/|A∪B| (InterUnionExpr, r17) — same distinct
+        // one-pass |A∩B|/|A∪B| (graft_inter_union, r17) — same distinct
         // counts as the array_intersect/array_union pair, two hash
         // tables per candidate instead of four (the q106 verify cure)
         val iu170 = graft.functions.InterUnion(s, col("a_sh"), col("b_sh"))

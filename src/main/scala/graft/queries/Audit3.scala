@@ -61,7 +61,7 @@ object Audit3 {
         val docs = table(s, d, "documents")
         // checkpointed shingle frame serves banding + both exact joins
         // (the q164 pattern); the signature frame reads text directly
-        // through the codegen'd MinHashSignatureExpr — one extra narrow
+        // through the codegen'd graft_minhash_signature — one extra narrow
         // scan beats 8 interpreted HOF minima over 3M shingle elements
         val sh = Dedup.shingleFrame(docs, "doc_id", "text")
           .localCheckpoint()
@@ -172,7 +172,7 @@ object Audit3 {
         .select(col("lang").as("lang_declared"),
           // one-pass codegen'd scorer (r17): same split/lower, same
           // occurrence counts, same (score, code) argmax tiebreak as
-          // the 4-filter-HOF + array_max form (LangIdExpr)
+          // the 4-filter-HOF + array_max form (graft_lang_id)
           graft.functions.LangId(s, col("text")).as("lang_pred"))
         .groupBy("lang_declared", "lang_pred")
         .agg(count(lit(1)).as("n"))

@@ -24,7 +24,7 @@ object Curation4 {
     */
   def winnowExplode(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
-    // one imperative pass per doc (WinnowFpExpr) — the r16 rewrite of
+    // one imperative pass per doc (graft_winnow_fp) — the r16 rewrite of
     // the HOF chain (split → per-shingle md5 transform → window-min
     // transform with per-window slice allocations → array_distinct),
     // which evaluated ~300 interpreted lambdas per document. Same
@@ -453,7 +453,7 @@ object Curation4 {
       (s, d) => {
         // (doc_id, dg): CDC chunk digests under the 4-word Karp-Rabin
         // mod-8 boundary rule, in one imperative pass per doc
-        // (CdcChunksExpr, r17): same `\s+` split, same per-word hash32,
+        // (graft_cdc_chunks, r17): same `\s+` split, same per-word hash32,
         // same boundary rule, same per-chunk space-joined md5 digests
         // as the HOF chain it replaces (which ran ~3·len interpreted
         // lambdas + one md5 per word per doc); Curation4Spec's

@@ -25,7 +25,7 @@ object Curation5 {
   private[graft] val Tiers = Seq(64, 32, 16, 8)
 
   // hashed char-3-gram buckets (T182); private[graft] so the
-  // registered NGramHistExpr arity stays pinned to the same constant
+  // graft_ngram_hist kernel reads the same constant
   private[graft] val NGramB = 4096
 
   /** Rolling-polynomial window hash over per-token portable hashes —
@@ -128,7 +128,7 @@ object Curation5 {
         // whose narrow stage copied Σ tier lengths ≈ 120 tokens per
         // position (measured 2.5× the whole query at sf0.1). r17: the
         // typed-Dataset flatMap became a codegen'd expression
-        // (MultiscaleWindowsExpr, bit-identical rows) — the flatMap
+        // (graft_multiscale_windows, bit-identical rows) — the flatMap
         // paid Seq[String] deserialization + per-window tuple
         // re-encoding on every document. localCheckpoint for the same
         // two-consumer reason as q150 (dup build + probe).
@@ -164,7 +164,7 @@ object Curation5 {
           .join(wide, Seq("doc_id"))
           .select((Seq(col("doc_id"), col("n_tokens")) ++
             Tiers.map(l => coalesce(col(s"v$l"), empty).as(s"v$l"))): _*)
-        // one-pass span algebra (CoverageStatsExpr, r17): identical
+        // one-pass span algebra (graft_coverage_stats, r17): identical
         // set semantics to the array_sort/distinct/except/filter-with-
         // array_contains HOF chain it replaces — whose heads/tails
         // filters were O(|u|²) interpreted lambdas per document
@@ -291,7 +291,7 @@ object Curation5 {
     */
   private def ngramHist(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    // One imperative code-point pass per doc (NGramHistExpr) — the
+    // One imperative code-point pass per doc (graft_ngram_hist) — the
     // r16 rewrite of the ascii(substr(text, i, 1)) HOF chain, whose
     // per-position substr made the codes array O(len²) per document
     // and whose per-position explode shuffled corpus-sized gram rows

@@ -58,7 +58,7 @@ object Embeddings {
         col("e").as("se")))).as("seeds"))
 
   /** In-row argmin over the seed array via the codegen'd
-    * [[graft.functions.NearestSeedExpr]] (strict `<` over the sorted
+    * `graft_nearest_seed` (strict `<` over the sorted
     * array keeps the earlier seed on distance ties — identical to the
     * oracle's ORDER BY dist, seed_id tie-break). The interpreted HOF
     * equivalent lives on in [[nearestSeedHof]] for the equivalence spec.

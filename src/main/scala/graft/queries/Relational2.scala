@@ -30,7 +30,7 @@ object Relational2 {
         SELECT m.lang AS lang_pred, COUNT(*) AS n
         FROM best GROUP BY lang_pred ORDER BY lang_pred"""),
       (s, d) => table(s, d, "documents")
-        // same one-pass scorer as q177 (LangIdExpr, r17)
+        // same one-pass scorer as q177 (graft_lang_id, r17)
         .select(graft.functions.LangId(s, col("text")).as("lang_pred"))
         .groupBy("lang_pred").agg(count(lit(1)).as("n"))
         .orderBy("lang_pred")),

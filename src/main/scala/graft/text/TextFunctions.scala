@@ -78,14 +78,6 @@ object TextFunctions {
         (acc, i) => (acc * 31 + ascii(c.substr(i, lit(1)))) % Hashing.P))
       .otherwise(lit(0L))
 
-  /** Hashed-feature buckets, fastText-style: each token hashes (same
-    * rolling polynomial as [[fingerprint]]) into one of `buckets`
-    * feature slots. Nested higher-order functions — stays inside
-    * codegen, no UDF, zero shuffle.
-    */
-  def hashedBuckets(ws: Column, buckets: Int): Column =
-    transform(ws, w => fingerprint(w) % buckets)
-
   /** Stopword profiles for the language-ID heuristic (public common-word
     * lists, a few per language).
     */

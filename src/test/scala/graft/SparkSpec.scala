@@ -25,7 +25,8 @@ object TaskFailureMonitor
     "not registered in this JVM", // QboDataSourceSpec fail-fast case
     "graft_gram_matrix: expected", // GramMatrixSpec arity intercepts
     "graft.functions.GramMatrixAgg", // GramMatrixSpec overflow intercept
-    "failed the declared-schema parse") // QboSourceSpec strict-parse cases
+    "failed the declared-schema parse", // QboSourceSpec strict-parse cases
+    "MALFORMED_RECORD_IN_PARSING") // QboSpec malformed-report cases
   override def onTaskEnd(
       e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
     e.reason match {

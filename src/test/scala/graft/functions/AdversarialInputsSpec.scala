@@ -6,11 +6,11 @@ import graft.SparkSpec
 import graft.functions.GraftFunctions._
 
 /** Inputs the synthetic corpus never produces, fed to every scalar
-  * `graft_*` function that takes a string or an array<string>: NULL,
-  * empty and whitespace-only text, a supplementary code point (U+1F600,
-  * two UTF-16 chars, four UTF-8 bytes) and an array with a NULL
-  * element. Each value goes into one argument position at a time, the
-  * other arguments holding an ordinary value.
+  * `graft_*` function: NULL, empty and whitespace-only text, a
+  * supplementary code point (U+1F600, two UTF-16 chars, four UTF-8
+  * bytes), empty arrays, an array with a NULL element, NaN and a
+  * negative distance. Each value goes into one argument position at a
+  * time, the other arguments holding an ordinary value.
   *
   * The values reach the function through a non-foldable
   * `IF(id >= 0, v, NULL)` over `range(1)`, so the optimizer cannot
@@ -22,12 +22,16 @@ class AdversarialInputsSpec extends SparkSpec {
 
   private val S = "string"
   private val A = "array<string>"
+  private val D = "array<double>"
+  private val L = "array<bigint>"
+  private val N = "bigint"
+  private val Seeds = "array<struct<sid:bigint,se:array<double>>>"
 
-  /** The scalar entries with string / array<string> arguments, by
-    * argument kind (array<bigint> is also accepted by
-    * graft_inter_union; only its string form is exercised here).
+  /** The scalar entries by argument kind (array<bigint> is also
+    * accepted by graft_inter_union; only its string form is exercised
+    * here).
     */
-  private val textual: Seq[(String, Seq[String])] = Seq(
+  private val scalars: Seq[(String, Seq[String])] = Seq(
     MinhashName -> Seq(S), MinhashBandsName -> Seq(A),
     ShinglesName -> Seq(S), JaccardName -> Seq(A, A),
     SimhashName -> Seq(S), NfcName -> Seq(S),
@@ -38,25 +42,40 @@ class AdversarialInputsSpec extends SparkSpec {
     Hash32SortedDistinctName -> Seq(A), LangIdName -> Seq(S),
     CdcChunksName -> Seq(S), FingerprintName -> Seq(S),
     MultiscaleWindowsName -> Seq(A), HashedBucketsName -> Seq(S),
-    HashedScoreName -> Seq(S))
+    HashedScoreName -> Seq(S), LshBucketName -> Seq(D),
+    DotName -> Seq(D, D), NearestSeedName -> Seq(D, Seeds),
+    PosCloseName -> Seq(L, L, N), CoverageStatsName -> Seq(L, L, L, L))
 
-  /** Entries outside this spec: numeric arguments, the generator
-    * (tested below) and the aggregates.
+  /** Entries outside this spec: the generator (tested below) and the
+    * aggregates.
     */
-  private val other = Set(ShingleExplodeName, LshBucketName, DotName,
-    NearestSeedName, PosCloseName, CoverageStatsName, BloomGate.AggName,
+  private val other = Set(ShingleExplodeName, BloomGate.AggName,
     BloomGate.MightContainName, GramMatrixAgg.Name, MisraGriesAgg.Name)
 
   private val smile = "\uD83D\uDE00" // U+1F600
   private val nullValue = Map(S -> "CAST(NULL AS STRING)",
-    A -> "CAST(NULL AS ARRAY<STRING>)")
+    A -> "CAST(NULL AS ARRAY<STRING>)", D -> "CAST(NULL AS ARRAY<DOUBLE>)",
+    L -> "CAST(NULL AS ARRAY<BIGINT>)", N -> "CAST(NULL AS BIGINT)",
+    Seeds -> s"CAST(NULL AS $Seeds)")
   private val adversarial = Map(
     S -> Seq("''", "'   '", s"'$smile'", s"'a $smile b c d $smile$smile e'"),
     A -> Seq("CAST(array() AS ARRAY<STRING>)", "array('')", "array('   ')",
       s"array('$smile', 'a $smile b')", "array('a', NULL, 'b')",
-      "array(CAST(NULL AS STRING))"))
+      "array(CAST(NULL AS STRING))"),
+    D -> Seq("CAST(array() AS ARRAY<DOUBLE>)", "array(1.0D, NULL)",
+      "array(CAST('NaN' AS DOUBLE), -0.0D)"),
+    L -> Seq("CAST(array() AS ARRAY<BIGINT>)", "array(5L, NULL, 1L)",
+      "array(9L, 2L, 2L)"),
+    N -> Seq("0L", "-1L"),
+    // seed vectors at least as long as the ordinary query: a shorter
+    // one fails by design (graft_nearest_seed reports the dims)
+    Seeds -> Seq(s"CAST(array() AS $Seeds)",
+      "array(struct(3L, array(NULL, 1.0D, 0.0D)))",
+      "array(struct(4L, array(CAST('NaN' AS DOUBLE), 0.0D, 0.0D)))"))
   private val ordinary = Map(S -> "'a b c d e f'",
-    A -> "array('a b c', 'b c d')")
+    A -> "array('a b c', 'b c d')", D -> "array(1.0D, 2.0D)",
+    L -> "array(1L, 4L)", N -> "2L",
+    Seeds -> "array(struct(7L, array(1.0D, 0.0D)), struct(9L, array(0.0D, 1.0D)))")
 
   private def session(codegen: Boolean): SparkSession = {
     val s = spark.newSession()
@@ -73,9 +92,9 @@ class AdversarialInputsSpec extends SparkSpec {
   private def wrap(v: String) = s"IF(id >= 0, $v, NULL)"
 
   test("the adversarial table covers every specs entry") {
-    assert(textual.map(_._1).toSet ++ other ==
+    assert(scalars.map(_._1).toSet ++ other ==
       GraftFunctions.specs.map(_.name).toSet)
-    assert(textual.map(_._1).toSet.intersect(other).isEmpty)
+    assert(scalars.map(_._1).toSet.intersect(other).isEmpty)
   }
 
   test("string / array<string> scalars: NULL in gives NULL out; empty, " +
@@ -83,7 +102,7 @@ class AdversarialInputsSpec extends SparkSpec {
       "throw nor differ between codegen and interpreted evaluation") {
     val cg = session(codegen = true)
     val interp = session(codegen = false)
-    for ((name, kinds) <- textual) {
+    for ((name, kinds) <- scalars) {
       // one column per (argument position, value): (call text, is NULL)
       val cases = for {
         p <- kinds.indices

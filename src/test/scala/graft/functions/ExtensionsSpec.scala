@@ -116,6 +116,13 @@ class ExtensionsSpec extends SparkSpec {
     "graft_gram_matrix" -> Seq("array(1.0D, 2.0D)", "2"),
     "graft_mg_candidates" -> Seq("'a'", "4"))
 
+  /** Entries whose unaliased column is not `<name>(...)`: Spark's own
+    * Bloom expressions keep their pretty names, and the generator's
+    * column is its element field, `shingle`.
+    */
+  private val ownNamed = Set(BloomGate.AggName, BloomGate.MightContainName,
+    GraftFunctions.ShingleExplodeName)
+
   test("every specs entry resolves in SQL text on a fresh session at its " +
       "declared arity, and one argument more or fewer fails analysis") {
     assert(sampleArgs.map(_._1) == GraftFunctions.specs.map(_.name))
@@ -125,10 +132,14 @@ class ExtensionsSpec extends SparkSpec {
       assert(args.length == s.arity, s.name)
       def call(as: Seq[String]) =
         s"SELECT ${s.name}(${as.mkString(", ")}) FROM range(1)"
+      val df = fresh.sql(call(args))
       val rows =
-        try fresh.sql(call(args)).collect()
+        try df.collect()
         catch { case t: Exception => fail(s"${call(args)} -> $t", t) }
       assert(rows.nonEmpty, call(args))
+      if (!ownNamed(s.name))
+        assert(df.columns.head.startsWith(s"${s.name}("),
+          s"${call(args)} names its column ${df.columns.head}")
       val surplus = args :+ args.last
       val short = if (args.nonEmpty) Seq(args.init) else Nil
       for (wrong <- surplus +: short) {

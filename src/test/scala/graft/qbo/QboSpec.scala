@@ -149,6 +149,25 @@ class ReportsSpec extends SparkSpec {
       if (r.isNullAt(0)) None else Some(r.getDouble(0))).toSeq
     assert(amounts == Seq(Some(1250.5), None))
   }
+
+  test("a truncated or drifted report raises instead of parsing to 0 rows") {
+    val tl = Fixtures.transactionListReport
+    val drifted = tl.replaceFirst("\"Row\"\\s*:\\s*\\[", "\"Row\": \"x\", \"Was\": [")
+    assert(drifted != tl)
+    val byVendor = Fixtures.byVendorReport
+    for ((what, df) <- Seq(
+        "truncated TransactionList" -> (() =>
+          Reports.TransactionList.parse(spark, tl.take(tl.length / 2))),
+        "drifted TransactionList" -> (() =>
+          Reports.TransactionList.parse(spark, drifted)),
+        "truncated ByVendor page" -> (() =>
+          Reports.TransactionListByVendor.parsePages(spark,
+            Seq(byVendor, byVendor.take(byVendor.length / 2)))))) {
+      val e = intercept[Exception](df().collect())
+      assert(e.getMessage.contains("MALFORMED_RECORD_IN_PARSING"),
+        s"$what -> ${e.getMessage}")
+    }
+  }
 }
 
 class WarehouseSpec extends SparkSpec {
