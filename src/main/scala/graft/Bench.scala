@@ -366,18 +366,6 @@ object Bench {
       val p = priorOf(name)
       if (p > 0) math.max(30.0, 10.0 * p) else 300.0
     }
-    def unpersistAll(): Unit =
-      // Storage hygiene between queries (round-13): localCheckpoint
-      // blocks live in the SAME unified memory pool that execution
-      // borrows from, and the ContextCleaner only reclaims them after a
-      // driver GC proves the RDD unreachable — which an 8 GB driver may
-      // not run for hundreds of queries; the accumulated blocks crowd
-      // out execution memory and the board's alphabetical TAIL measures
-      // 10–50× its solo cost. Queries are independent, so any RDD still
-      // persisted after a query's reps is a leak by definition here.
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      catch { case _: Throwable => }
 
     // ---- budget planner (VERDICT-r15 item 1a). Cost model: each rep
     // of q costs est(q); the warm-up costs WarmFactor × est(q).
@@ -421,7 +409,7 @@ object Bench {
         try {
           val readings = timedReps(spark, meter, sfDir, name,
             stallCapOf(name), repsHere)
-          unpersistAll()
+          graft.queries.Common.unpersistAll(spark)
           // stalled reps sit in queries_reps for transparency but are
           // excluded from the median/min when a clean rep exists — a
           // cancelled-at-cap reading is a floor on the stall, not a
@@ -439,7 +427,7 @@ object Bench {
             // loud failure: a crashed query must read as a regression,
             // not as a faster total
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            unpersistAll()
+            graft.queries.Common.unpersistAll(spark)
             (-1.0, -1.0, -1.0, Seq.empty[Double])
         }
       results.synchronized { results += ((name, entry)) }
@@ -502,7 +490,7 @@ object Bench {
           if (readings.exists(_.stalled)) results.synchronized { stalled += name }
           readings.filterNot(_.stalled).map(_.secs)
         } catch { case _: Throwable => Seq.empty[Double] }
-      unpersistAll()
+      graft.queries.Common.unpersistAll(spark)
       val seqMed = results.synchronized { results.toMap.apply(name)._1 }
       results.synchronized {
         repinned += ((name, (priorOf(name), seqMed,

@@ -26,12 +26,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // same storage hygiene as Bench: queries are independent, so a
-      // still-persisted RDD (localCheckpoint) after a query is a leak;
-      // freeing it deterministically keeps the 280-query sweep's tail
-      // out of storage-vs-execution memory contention
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.queries.Common.unpersistAll(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -30,28 +30,8 @@ object Warehouse {
     * instead of double-loading it (fixes the reference's re-run hole,
     * qb_profit&loss.py:136-151).
     */
-  def appendMonth(df: DataFrame, table: String): Unit = {
-    val spark = df.sparkSession
-    // scope the dynamic-overwrite mode to this write: leaving it set
-    // would silently flip any later overwrite-insertInto on the shared
-    // session from static (truncate all partitions) to dynamic
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try {
-      if (!spark.catalog.tableExists(table)) {
-        df.write.partitionBy("month").format("parquet").saveAsTable(table)
-      } else {
-        // insertInto matches by position; align to the table's column
-        // order with month (the partition column) last.
-        val cols = spark.table(table).columns
-        df.select(cols.map(col).toSeq: _*).write.mode("overwrite").insertInto(table)
-      }
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  def appendMonth(df: DataFrame, table: String): Unit =
+    overwritePartitions(df, table, "month")
 
   /** Exactly-once streaming sink primitive: idempotent per-micro-batch
     * append. foreachBatch gives at-least-once delivery — a crashed
@@ -63,20 +43,29 @@ object Warehouse {
     * double-appending: at-least-once delivery + idempotent write =
     * exactly-once table contents.
     */
-  def appendBatch(df: DataFrame, table: String, batchId: Long): Unit = {
+  def appendBatch(df: DataFrame, table: String, batchId: Long): Unit =
+    overwritePartitions(df.withColumn("batch_id", lit(batchId)), table, "batch_id")
+
+  /** Write `df` into `table` partitioned by `partCol`, replacing only
+    * the partitions `df` holds: the first write creates the table, later
+    * ones overwrite dynamically.
+    */
+  private def overwritePartitions(df: DataFrame, table: String, partCol: String): Unit = {
     val spark = df.sparkSession
-    val keyed = df.withColumn("batch_id", lit(batchId))
+    // scope the dynamic-overwrite mode to this write: leaving it set
+    // would silently flip any later overwrite-insertInto on the shared
+    // session from static (truncate all partitions) to dynamic
     val key = "spark.sql.sources.partitionOverwriteMode"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "dynamic")
     try {
       if (!spark.catalog.tableExists(table)) {
-        keyed.write.partitionBy("batch_id").format("parquet")
-          .saveAsTable(table)
+        df.write.partitionBy(partCol).format("parquet").saveAsTable(table)
       } else {
+        // insertInto matches by position; align to the table's column
+        // order with the partition column last.
         val cols = spark.table(table).columns
-        keyed.select(cols.map(col).toSeq: _*)
-          .write.mode("overwrite").insertInto(table)
+        df.select(cols.map(col).toSeq: _*).write.mode("overwrite").insertInto(table)
       }
     } finally prev match {
       case Some(v) => spark.conf.set(key, v)

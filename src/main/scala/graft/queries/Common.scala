@@ -222,6 +222,22 @@ object Common {
     df.localCheckpoint(true,
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
 
+  /** Release every RDD still persisted on `spark`'s context, without
+    * waiting for the blocks to go. The declared queries are independent,
+    * so a pinned RDD (a `localCheckpoint`, [[checkpointSer]]) left after
+    * one has finished is a leak: its blocks live in the unified pool
+    * that execution borrows from, and the ContextCleaner reclaims them
+    * only after a driver GC proves the RDD unreachable, which a large
+    * driver heap may not run for hundreds of queries. Left to pile up,
+    * they crowd out execution memory, and the tail of a long sweep
+    * measured 10–50× its solo cost (round 13). A failed release is
+    * swallowed: it must never fail the sweep it cleans up after.
+    */
+  def unpersistAll(spark: SparkSession): Unit =
+    try spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    catch { case _: Throwable => }
+
   /** State partition count for the bench/verify streaming DRAINS.
     * Every stateful streaming operator pays a fixed
     * per-partition-per-batch state-store cost (provider init, delta

@@ -23,8 +23,7 @@ object ProbeRecall {
         w.intersect(got.getOrElse(q, Set.empty)).size.toDouble / w.size }
       println(f"[recall] $d recall@5 = ${recalls.sum / recalls.length}%.3f" +
         s" over ${recalls.length} queries")
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.queries.Common.unpersistAll(spark)
     }
     spark.stop()
   }

@@ -212,7 +212,7 @@ object ScaleSweep {
                   String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse("")))
               } finally {
                 // queries may leave pinned frames behind; free them as Bench does
-                spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+                Common.unpersistAll(spark)
               }
           }
           cells += cell

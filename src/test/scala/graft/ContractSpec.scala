@@ -15,11 +15,11 @@ class ContractSpec extends SparkSpec {
   }
 
   test("every query plans with distinct, non-empty output columns") {
-    SparkEntry.registry.foreach { q =>
-      val cols = q.run(spark, sfDir).columns.toSeq
-      assert(cols.nonEmpty, q.name)
+    DeclaredPlans.all.foreach { b =>
+      val cols = b.analyzed.schema.fieldNames.toSeq
+      assert(cols.nonEmpty, b.name)
       assert(cols.distinct.size == cols.size,
-        s"${q.name} has duplicate output columns: $cols")
+        s"${b.name} has duplicate output columns: $cols")
     }
   }
 

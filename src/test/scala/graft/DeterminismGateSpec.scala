@@ -138,14 +138,13 @@ class DeterminismGateSpec extends SparkSpec {
 
   test("no query contains a transcendental, a round-on-double, or an " +
       "off-pattern double→decimal cast") {
-    val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, _) if whitelist.contains(name) => Nil
-      case (name, fn) =>
+    val bad = DeclaredPlans.all.flatMap {
+      case b if whitelist.contains(b.name) => Nil
+      case b =>
         // analysis only — the gate inspects plans, it never executes
-        val plan = fn(spark, sfDir).queryExecution.analyzed
-        val hits = planOffenders(plan).distinct
+        val hits = planOffenders(b.analyzed).distinct
         if (hits.isEmpty) Nil
-        else Seq(s"$name:\n  ${hits.mkString("\n  ")}")
+        else Seq(s"${b.name}:\n  ${hits.mkString("\n  ")}")
     }
     assert(bad.isEmpty,
       s"\nboundary-sensitive expressions found (see scaladoc for the " +
@@ -175,13 +174,11 @@ class DeterminismGateSpec extends SparkSpec {
   }
 
   test("no query output schema contains a DecimalType column") {
-    val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val schema = fn(spark, sfDir).schema
-        val hits = schema.fields.filter(f => containsDecimal(f.dataType))
-        if (hits.isEmpty) Nil
-        else Seq(s"$name: ${hits.map(f => s"${f.name}: ${f.dataType.sql}")
-          .mkString(", ")}")
+    val bad = DeclaredPlans.all.flatMap { b =>
+      val hits = b.analyzed.schema.fields.filter(f => containsDecimal(f.dataType))
+      if (hits.isEmpty) Nil
+      else Seq(s"${b.name}: ${hits.map(f => s"${f.name}: ${f.dataType.sql}")
+        .mkString(", ")}")
     }
     assert(bad.isEmpty,
       s"\ndecimal-emitting query outputs (rescale to BIGINT on a " +

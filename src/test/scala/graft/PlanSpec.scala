@@ -307,9 +307,8 @@ class PlanSpec extends SparkSpec {
     // misses — at 1000 executors that is partitions² tasks. Every
     // densification/scalar-grid cross join in the query surface is
     // against a bounded frame, so the hint is always correct; this
-    // gate keeps it present. Streaming/side-effecting queries build
-    // (and for q229-class drain) their frames here exactly as the
-    // DeterminismGateSpec walk does.
+    // gate keeps it present. The plans come from the shared build of
+    // every declared query (DeclaredPlans).
     import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, ResolvedHint}
     def hintedBroadcast(side: LogicalPlan): Boolean =
       side.exists {
@@ -317,21 +316,59 @@ class PlanSpec extends SparkSpec {
           org.apache.spark.sql.catalyst.plans.logical.BROADCAST)
         case _ => false
       }
-    val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val plan = fn(spark, sfDir).queryExecution.analyzed
-        val offenders = plan.collectWithSubqueries {
-          case j: Join if j.condition.isEmpty &&
-              !hintedBroadcast(j.left) && !hintedBroadcast(j.right) =>
-            s"$name: ${j.joinType} join of ${j.left.nodeName} × " +
-              s"${j.right.nodeName} with no condition and no " +
-              "broadcast hint"
-        }
-        offenders
+    val bad = DeclaredPlans.all.flatMap { b =>
+      b.analyzed.collectWithSubqueries {
+        case j: Join if j.condition.isEmpty &&
+            !hintedBroadcast(j.left) && !hintedBroadcast(j.right) =>
+          s"${b.name}: ${j.joinType} join of ${j.left.nodeName} × " +
+            s"${j.right.nodeName} with no condition and no " +
+            "broadcast hint"
+      }
     }
     assert(bad.isEmpty,
       s"\nunhinted cross joins (add broadcast() to the bounded " +
         s"side):\n${bad.mkString("\n")}")
+  }
+
+  /** The queries that still run an interpreted `LambdaFunction` (a
+    * higher-order function such as `transform` or `aggregate`, which
+    * codegen evaluates row by row through the interpreter). The list
+    * only shrinks: a query off it that gains a lambda fails the gate
+    * below, and so does a query on it that no longer needs its entry.
+    */
+  private val lambdaAllowlist: Set[String] = Set(
+    "q100_unigram_logprob", "q103_quantized_topk", "q104_multi_signal_dedup",
+    "q105_qgram_editdist", "q111_substring_coverage", "q112_bm25_topk",
+    "q113_chunk_overlap", "q115_semdedup", "q116_intradoc_dup_fraction",
+    "q119_edjoin_production", "q120_kmeans_codebook", "q121_pq_adc_topk",
+    "q140_perceptual_near_dup", "q142_gram_matrix", "q144_bpe_merges",
+    "q145_bpe_encode", "q148_pmi_collocations", "q149_dsir_weights",
+    "q150_substring_dedup", "q151_principal_projection",
+    "q154_novelty_profile", "q157_gopher_filter", "q159_span_removal",
+    "q161_source_leakage", "q162_substring_dedup_bloom",
+    "q165_bigram_logprob", "q190_lsh_s_curve", "q204_boilerplate_lines",
+    "q225_source_overlap_matrix", "q228_pack_boundaries",
+    "q271_multiscale_dedup", "q279_lang_router", "q27_quality_score",
+    "q280_exact_dup_substring", "q281_ann_graph", "q31_shingle_stats",
+    "q36_cosine_topk", "q37_ann_lsh", "q38_embedding_stats", "q57_ann_ivf",
+    "q71_embedding_near_dup", "q97_int8_quantize", "q99_chunk_dedup",
+    "qbo_byvendor_paged", "qbo_transaction_list", "qbo_txnlist_by_vendor")
+
+  test("interpreted lambdas appear only in the allowlisted queries") {
+    // a query's lambdas: those left in its executed plan, plus those
+    // in the executions its build ran (eager pins and drains)
+    val counts = DeclaredPlans.all.map(b =>
+      b.name -> (PlanFacts.lambdas(b.executed) + b.buildLambdas)).toMap
+    val unlisted = counts.toSeq.sorted.collect {
+      case (n, c) if c > 0 && !lambdaAllowlist(n) => s"$n: $c"
+    }
+    val stale = lambdaAllowlist.toSeq.sorted.filter(n => counts.get(n).forall(_ == 0))
+    assert(unlisted.isEmpty,
+      s"\ninterpreted lambdas in queries off the allowlist (use a " +
+        s"graft_* kernel instead):\n${unlisted.mkString("\n")}")
+    assert(stale.isEmpty,
+      s"\nallowlisted queries with no interpreted lambda (remove them " +
+        s"from the list):\n${stale.mkString("\n")}")
   }
 
   test("q237: the remainder rank routes onto RunningTotal — no " +

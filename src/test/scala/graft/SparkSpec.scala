@@ -53,6 +53,9 @@ object TaskFailureMonitor
 }
 
 object SparkTestSession {
+  /** The testdata instance every suite reads. */
+  val sfDir = "/root/testdata/sf0.001"
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       // local[4, 2]: 4 threads, TWO task attempts — plain local[N]
@@ -85,7 +88,7 @@ object SparkTestSession {
 abstract class SparkSpec extends AnyFunSuite
     with org.scalatest.BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestSession.spark
-  val sfDir = "/root/testdata/sf0.001"
+  val sfDir: String = SparkTestSession.sfDir
 
   /** Retry-loudness gate (ADVICE-r9): any non-allowlisted task failure
     * observed on the shared session fails the suite where it surfaced —
